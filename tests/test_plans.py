@@ -75,6 +75,21 @@ def test_pipeline_has_exactly_one_exchange(spark, corpus):
     assert _nodes(plan, "Exchange") == 1
 
 
+def test_pipeline_validates_in_one_arrow_kernel_after_exchange(spark, corpus):
+    """The whole validator battery is ONE vectorized Python boundary
+    (ArrowEvalPython, no row-at-a-time BatchEvalPython), evaluated on
+    the reduce side of the url exchange."""
+    from webxtract.pipeline import run_pipeline
+
+    pages_path, _ = corpus
+    df = run_pipeline(spark.read.parquet(pages_path))
+    df.write.format("noop").mode("overwrite").save()
+    final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert len(re.findall(r"ArrowEvalPython \[", final)) == 1, final
+    assert "BatchEvalPython" not in final
+    assert final.index("ArrowEvalPython") < final.index("Exchange")
+
+
 def test_benchmark_overlap_broadcasts_benchmark_side(spark):
     """Decontamination must broadcast the (small) benchmark shingle
     set: the corpus side is the 100 TB table and must never shuffle

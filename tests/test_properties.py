@@ -140,3 +140,52 @@ def test_shingles_expr_matches_python(spark):
         toks = t.split()
         exp = sorted({" ".join(toks[i : i + 3]) for i in range(max(0, len(toks) - 2))}) if len(toks) >= 3 else []
         assert got[t] == exp, (t, got[t], exp)
+
+
+def test_validator_kernel_primitives_match_spark(spark):
+    """The Python validator kernel reproduces the Spark expression forms
+    it replaced; each primitive is compared with its Spark function on
+    the inputs where Python's defaults differ (whitespace classes, Java
+    ``$``, Unicode digits, thousands grouping, years outside 1..9999)."""
+    from webxtract.ops import validators as V
+
+    strs = ["", " a ", "\ta\t", " a ", "A1234-12345-12345\n", "123456789\r\n",
+            "123456789 ", "123456789\u0085", "123456789\n\n", "١٢٣",
+            "x y\tz", " lead  trail ", "ß-1 2", "ab "]
+    pats = [r"^\d{9}$", r"^\d+$", r"^[A-Z]\d{4}-\d{5}-\d{5}$", "[A-Z]", r"^[A-Z]\d{8}$|^\d{9}$"]
+    nums = [0.04, -0.04, 0.05, 0.15, 0.25, 2.45, 5.049999, 999.95, 1234.56, -1234.56,
+            1234567.25, 7999.9]
+    days = [-719893, -719528, -1, 0, 5479, 2932896, 3652059, 3700000]
+
+    sdf = spark.createDataFrame([(s,) for s in strs], "s string")
+    got = sdf.select(
+        "s", F.trim("s").alias("trim"), F.upper("s").alias("upper"),
+        F.regexp_replace("s", r"[\s\-]", "").alias("sep"),
+        F.split(F.trim("s"), r"\s+").alias("words"),
+        *[F.col("s").rlike(p).alias(f"p{i}") for i, p in enumerate(pats)],
+    ).collect()
+    for r in got:
+        s = r["s"]
+        assert V._trim(s) == r["trim"], repr(s)
+        assert s.upper() == r["upper"], repr(s)
+        assert V._SEP.sub("", s) == r["sep"], repr(s)
+        assert V._WS_RUN.split(V._trim(s)) == list(r["words"]), repr(s)
+        for i, p in enumerate(pats):
+            assert V._rlike(s, p) == r[f"p{i}"], (repr(s), p)
+
+    ndf = spark.createDataFrame([(x,) for x in nums], "x double")
+    for r in ndf.select("x", F.format_number("x", 1).alias("f")).collect():
+        assert V._f1(r["x"]) == r["f"], r["x"]
+
+    ddf = spark.createDataFrame([(d,) for d in days], "d int").select(
+        "d", F.date_from_unix_date("d").alias("dt"))
+    for r in ddf.select(
+        "d", F.date_format("dt", "yyyy-MM-dd").alias("iso"),
+        F.date_format("dt", "MM/dd").alias("md"), F.date_format("dt", "yy").alias("yy"),
+        F.year("dt").alias("y"),
+    ).collect():
+        y, _m, _d = V._ymd(r["d"])
+        assert V._iso(r["d"]) == r["iso"], r["d"]
+        assert V._mmdd(r["d"], "/") == r["md"], r["d"]
+        assert f"{abs(y) % 100:02d}" == r["yy"], r["d"]
+        assert y == r["y"], r["d"]

@@ -430,3 +430,53 @@ def test_run_pipeline_cached_plan_physical_identity(spark, corpus):
         return re.sub(r"plan_id=\d+", "plan_id=x", s)
 
     assert phys(analyzed) == phys(opt)
+
+
+# sha256 over the sorted (url, to_json(validation_results),
+# to_json(validation_summary)) lines of run_pipeline on a fixed synth
+# corpus, recorded from the column-expression battery the Arrow kernel
+# replaced: the kernel must reproduce it byte for byte (to_json keeps
+# the order of details entries).
+VALIDATION_DIGEST = "2f4a7ebad9f6760322095e727d905ae7afd0b52767bcd090da81593182d1a7fd"
+
+
+def test_validation_output_digest_pinned(spark, tmp_path):
+    import hashlib
+
+    from webxtract.synth import gen_pages, to_parquet
+
+    pages, _ = gen_pages(300, RUN_DATE, seed=7)
+    path = str(tmp_path / "pages.parquet")
+    to_parquet(pages, path)
+    rows = (
+        run_pipeline(spark.read.parquet(path), run_date=RUN_DATE)
+        .select("url", F.to_json("validation_results").alias("r"),
+                F.to_json("validation_summary").alias("s"))
+        .collect()
+    )
+    lines = sorted((r["url"], r["r"], r["s"]) for r in rows)
+    blob = "\n".join("\t".join(t) for t in lines)
+    assert len(lines) == 300
+    assert hashlib.sha256(blob.encode()).hexdigest() == VALIDATION_DIGEST
+
+
+def test_run_pipeline_plan_cache_releases_unpersisted_input(spark, tmp_path):
+    """A cache hit taken while the caller has the input persisted must
+    not pin that persisted data: after unpersist(), the next call's plan
+    reads the source again (no InMemoryRelation)."""
+    from webxtract.synth import gen_pages, to_parquet
+
+    pages, _ = gen_pages(40, RUN_DATE, seed=11)
+    path = str(tmp_path / "pages.parquet")
+    to_parquet(pages, path)
+    src = spark.read.parquet(path).persist()
+    try:
+        src.count()
+        run_pipeline(src, run_date=RUN_DATE).count()
+        hit = run_pipeline(src, run_date=RUN_DATE)
+        assert "InMemoryRelation" in hit._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        src.unpersist(blocking=True)
+    after = run_pipeline(spark.read.parquet(path), run_date=RUN_DATE)
+    assert "InMemoryRelation" not in after._jdf.queryExecution().optimizedPlan().toString()
+    assert after.count() == 40

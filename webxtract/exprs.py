@@ -2,8 +2,8 @@
 
 ``bind_once`` is the load-bearing trick of this engine's rule layer:
 Catalyst inlines a named subexpression at every reference site, and
-interpreted (non-codegen) contexts — higher-order-function lambdas, the
-validator dispatch — re-evaluate each inlined copy per row. Binding the
+interpreted (non-codegen) contexts — higher-order-function lambdas —
+re-evaluate each inlined copy per row. Binding the
 value as a single-element ``transform`` lambda variable guarantees (a)
 exactly one copy of the subtree in the plan and (b) exactly one
 evaluation per row, with every reference a cheap lambda-var access.
@@ -70,12 +70,6 @@ def bind_once(value: Column, build) -> Column:  # noqa: ANN001
     lambda variable. ``value`` may be any type (struct/array/scalar) and
     may be NULL — the lambda still runs (build must tolerate NULL)."""
     return F.try_element_at(F.transform(F.array(value), build), F.lit(1))
-
-
-def pick_first(arr: Column, build) -> Column:  # noqa: ANN001
-    """First-match binding: ``arr`` is a (possibly empty) filtered array;
-    returns build(first element) or NULL when empty."""
-    return F.try_element_at(F.transform(arr, build), F.lit(1))
 
 
 def first_wins_argmax(

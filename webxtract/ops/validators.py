@@ -1,185 +1,247 @@
 """The validation battery (operators V1-V46 + V-agg, SURVEY.md §2.5) as
-generated Catalyst column expressions.
+one vectorized Arrow kernel.
 
 The reference runs 5 base validators + 1 type-specific validator per
-document on a thread pool (validation_service.py:306-327); here each
-validator is an independent column expression and the whole battery is
-one codegen'd projection — parallelism is across rows, not checks.
+document on a thread pool (validation_service.py:306-327). Here the
+validators are plain Python functions over one document row, and ONE
+scalar Arrow UDF (``arrow_udf``) maps them over each Arrow batch: the
+rule layer crosses the JVM/Python boundary once per batch, and the
+battery runs in the same Python workers as the extraction legs.
 
-Plan-size discipline (the round-1 lesson — a 34 MiB serialized task and
-minutes of janino compile): the 15 provincial/state DL validators and
-the 10 national passport validators are NOT inlined per type. Each
-family is ONE parametrized expression whose constants come from a
-*literal array of config structs*; the per-document config is selected
-with ``filter(cfg_array, c -> c.name == doc_type_enum)`` and bound via
-a ``transform`` lambda, so the plan carries exactly one copy of each
-family's logic plus a constant-folded rule table. Non-matching rows
-never evaluate the lambda (empty filter result), so dispatch cost is
-data-dependent exactly like the reference's dispatch map
-(validation_service.py:129-239).
+Kernel design:
+- Input is one struct per row: the 13 extracted field strings, the
+  three parsed dates, ``doc_type_enum``, ``run_date`` and
+  ``minimum_age``. The dates are parsed by Spark (``with_parsed_dates``,
+  the 23-format try-in-order parse) and cross the boundary as
+  ``unix_date`` day numbers, so date parsing cannot drift and any date
+  Spark can hold — year 0, negative, five-digit — reaches the kernel
+  (a Python ``datetime.date`` stops at 1..9999).
+- Output is ``array<VALIDATOR_RESULT_TYPE>`` (schemas.py), the five base
+  results followed by the dispatched type-specific one when the type
+  has a validator; details entries keep their insertion order.
+- The per-province DL validators and the national passport validators
+  are each ONE function over a config row (``DLConfig`` /
+  ``PassportConfig``); the dispatch map is a dict lookup on the enum.
+- Every public ``*_validator`` / ``*_expr`` name still returns a Column:
+  a single validator is the same kernel over a one-function battery.
+
+The kernel replaced a ~1 MB interpreted Catalyst tree (every validator
+bound through ``transform`` lambdas, so none of it compiled): building
+it cost ~94k py4j calls and its per-row evaluation dominated the
+pipeline's after-shuffle stage, most of it in GC.
+
+Spark semantics the kernel reproduces byte-for-byte (the old expression
+forms; tests/test_rules_pipeline.py pins a digest of the full output):
+- ``trim`` strips only U+0020 (``str.strip()`` strips all whitespace);
+- ``rlike`` is a Java-regex *search*: ``\\d``/``\\s`` are ASCII-only and
+  an unescaped ``$`` also matches before one final line terminator;
+- ``format_number(x, 1)`` groups thousands (``f"{x:,.1f}"``, both
+  HALF_EVEN on the exact double);
+- ``concat`` is NULL when any input is NULL while ``array_join`` skips
+  NULL elements — a NULL message still counts toward the status;
+- ``substring``/``split``/``element_at`` positions follow Spark's
+  1-based, clamp-at-bounds rules;
+- date_format's ``yyyy`` pads to 4 digits and signs years outside
+  0..9999; ``yy`` is the last two digits of the absolute year.
 
 Statuses (passed/failed/warning/skipped), skip conditions, thresholds,
 check order AND message strings replicate the reference byte-for-byte:
 the per-validator string constants live in DL_MSGS below (transcribed
 with file:line citations), and tests/test_validator_messages.py pins
-every (status, message) pair against goldens generated by running the
-reference's own validator classes (scripts/gen_validator_goldens.py)
-over the 21 ported cases, and tests/test_validator_messages_family.py
-does the same for the passport/PR/photo/health/US-DL family (105
-cases covering every fail-path string — the reference's warn-branch
-message is always the fixed header, so warning texts live only in
-details). ValidatorResult.details is a MAP<STRING,STRING> replicating
-the reference's per-check detail dicts in full — checks_performed,
+every (status, message, details) triple against goldens generated by
+running the reference's own validator classes
+(scripts/gen_validator_goldens.py) over the 21 ported cases, and
+tests/test_validator_messages_family.py does the same for the
+passport/PR/photo/health/US-DL family (105 cases covering every
+fail-path string). ValidatorResult.details is a MAP<STRING,STRING>
+replicating the reference's per-check detail dicts — checks_performed,
 calculated values (ages, day counts, validity years), verdict booleans,
 and the "; "-joined issues/warnings copies of the fail/warn branches
-(ontario_dl.py:236-241) — under the fixed value canonicalization
-documented at _dmap below; tests/test_validator_messages*.py assert
-(status, message, details) triples against reference-generated goldens.
-The Verifik external
-lookup runs in its disabled default (config.py:7 VERIFIK_API_ENABLED=
-false), surfaced as details.verifik_api_enabled=false on the ON/BC DL
-results (ontario_dl.py:223-226, bc_dl.py:244-248) — it changes no
-status.
-
-Date handling: the 27-format tolerant parser (validators/base.py:56-98)
-becomes an ordered coalesce of try_to_date; "now" is the frozen
-``run_date`` job parameter (SURVEY.md §7.4.3).
+(ontario_dl.py:236-241) — under a fixed value canonicalization shared
+with scripts/gen_validator_goldens.py:
+  bool       -> "true"/"false"
+  int        -> decimal string
+  round(x,1) -> format_number(x, 1)
+  list[str]  -> "; "-joined           (checks_performed, issues, ...)
+  list[dict] -> compact JSON          (document_format matched_patterns)
+The Verifik external lookup runs in its disabled default (config.py:7
+VERIFIK_API_ENABLED=false), surfaced as details.verifik_api_enabled=
+false on the ON/BC DL results (ontario_dl.py:223-226, bc_dl.py:244-248)
+— it changes no status. "now" is the frozen ``run_date`` job parameter
+(SURVEY.md §7.4.3).
 """
 
 from __future__ import annotations
 
+import functools
+import json
+import math
+import re
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, BooleanType
 
 from webxtract.exprs import gateway_cached
 from webxtract.rules import COUNTRY_CODES, DATE_FORMATS_SPARK
+from webxtract.schemas import FIELD_NAMES, VALIDATOR_RESULT_TYPE
+
+RESULTS_TYPE = ArrayType(VALIDATOR_RESULT_TYPE)
 
 
-def _empty_arr():
-    return F.array().cast("array<string>")
+# ------------------------------------------------ Spark semantics in Python
+
+_SEP = re.compile(r"[\s\-]", re.ASCII)          # regexp_replace(x, "[\s\-]", "")
+_SEP_SLASH = re.compile(r"[\s\-/]", re.ASCII)
+_WS_RUN = re.compile(r"\s+", re.ASCII)          # split(x, "\s+")
+_NON_AZ = re.compile(r"[^A-Z]")
+_NON_DIGIT = re.compile(r"[^0-9]")
+# Java's non-MULTILINE ``$``: end of input, or before a line terminator
+# that ends the input
+_JAVA_END = "(?=(?:\r\n|[\n\r\u0085\u2028\u2029])?\\Z)"
 
 
-def _empty_map():
-    return F.map_from_arrays(_empty_arr(), _empty_arr())
+@functools.lru_cache(maxsize=256)
+def _java_re(pattern: str) -> re.Pattern:
+    out, i, in_class = [], 0, False
+    while i < len(pattern):
+        ch = pattern[i]
+        if ch == "\\":
+            out.append(pattern[i:i + 2])
+            i += 2
+            continue
+        if ch == "[":
+            in_class = True
+        elif ch == "]":
+            in_class = False
+        elif ch == "$" and not in_class:
+            ch = _JAVA_END
+        out.append(ch)
+        i += 1
+    return re.compile("".join(out), re.ASCII)
 
 
-# --------------------------------------------------------- details plumbing
-#
-# ValidatorResult.details replicates the reference's per-check detail
-# dicts (checks_performed lists, calculated values, verdict booleans —
-# e.g. ontario_dl.py:66-226) as MAP<STRING,STRING> with a fixed value
-# canonicalization shared with scripts/gen_validator_goldens.py:
-#   bool       -> "true"/"false"
-#   int        -> decimal string
-#   round(x,1) -> format_number(x, 1)   (both sides HALF_EVEN on the
-#                 same IEEE double; matches the f"{x:.1f}" messages
-#                 already proven byte-exact by the golden suite)
-#   list[str]  -> "; "-joined           (checks_performed, issues, ...)
-#   list[dict] -> compact JSON          (document_format matched_patterns)
+def _rlike(s: str, pattern: str) -> bool:
+    return _java_re(pattern).search(s) is not None
 
 
-def _dmap(*pairs) -> Column:
+def _trim(s: str) -> str:
+    return s.strip(" ")
+
+
+def _s(v: str | None) -> str:
+    """coalesce(v, '')"""
+    return "" if v is None else v
+
+
+def _blank(v: str | None) -> bool:
+    return v is None or _trim(v) == ""
+
+
+def _cat(*parts: str | None) -> str | None:
+    """concat: NULL when any part is NULL."""
+    return None if any(p is None for p in parts) else "".join(parts)
+
+
+def _join(msgs: list, sep: str = "; ") -> str:
+    """array_join: NULL elements are skipped."""
+    return sep.join(m for m in msgs if m is not None)
+
+
+def _f1(x: float) -> str:
+    """format_number(x, 1)"""
+    return f"{x:,.1f}"
+
+
+def _t(cond: bool) -> str | None:
+    """The reference's ``details[k] = True`` shape: present only when true."""
+    return "true" if cond else None
+
+
+def _b(cond: bool) -> str:
+    return "true" if cond else "false"
+
+
+def _dmap(*pairs) -> dict:  # noqa: ANN002
     """Details map from (key, value) pairs; an entry is present exactly
-    when its value is non-NULL (conditional keys are F.when with no
-    otherwise). Keys may be Columns (config-driven key names, NULL key
-    drops the entry). Entry order is pair order.
-
-    A/B'd alternative (WEBXTRACT_DMAP_MODE=concat): map_concat of
-    per-pair conditional singleton maps — when/create_map/map_concat
-    are codegen expressions, but the battery already evaluates inside
-    HOF lambdas (bind_once/_pick), so the subtree is interpreted either
-    way and the 13 singleton maps + concat copy just allocate more.
-    Measured on the 100k-doc pipeline (executorCpuTime over completed
-    stages, 4 passes each): entries 94-98 core-s/pass, concat
-    111-142 — the entries form stays the default.
-
-    WEBXTRACT_STUB_DETAILS=1 (perf A/B hook, scripts/perf_pipeline.py)
-    replaces every details map with an empty map so the cost of the
-    details layer is directly measurable; correctness tests never set
-    it."""
-    import os
-
-    mode = os.environ.get("WEBXTRACT_DMAP_MODE", "")
-    if os.environ.get("WEBXTRACT_STUB_DETAILS") == "1" or mode == "empty":
-        return _empty_map()
-    if mode == "litvals":  # keep plumbing, replace value exprs
-        pairs = [(k, F.lit("x")) for k, _v in pairs]
-    if mode == "concat":  # codegen-shaped A/B alternative (slower, above)
-        singletons = []
-        for k, v in pairs:
-            kc = F.lit(k) if isinstance(k, str) else k
-            vc = F.lit(v) if isinstance(v, str) else v
-            cond = vc.isNotNull() if isinstance(k, str) else (
-                kc.isNotNull() & vc.isNotNull()
-            )
-            singletons.append(
-                F.when(cond, F.create_map(kc, vc)).otherwise(_empty_map())
-            )
-        return F.map_concat(*singletons) if singletons else _empty_map()
-    entries = F.array(
-        *[
-            F.struct(
-                (F.lit(k) if isinstance(k, str) else k).alias("key"),
-                (F.lit(v) if isinstance(v, str) else v).alias("value"),
-            )
-            for k, v in pairs
-        ]
-    )
-    return F.map_from_entries(
-        F.filter(entries, lambda e: e["key"].isNotNull() & e["value"].isNotNull())
-    )
+    when both are non-NULL. Entry order is pair order."""
+    return {k: v for k, v in pairs if k is not None and v is not None}
 
 
-def _dv(cond: Column, val) -> Column:
-    """Detail value present only under ``cond``."""
-    return F.when(cond, F.lit(val) if isinstance(val, str) else val)
+def _ymd(days: int) -> tuple[int, int, int]:
+    """Proleptic-Gregorian (year, month, day) of a unix day number, for
+    any year (H. Hinnant's civil_from_days)."""
+    z = days + 719468
+    era = z // 146097
+    doe = z - era * 146097
+    yoe = (doe - doe // 1460 + doe // 36524 - doe // 146096) // 365
+    doy = doe - (365 * yoe + yoe // 4 - yoe // 100)
+    mp = (5 * doy + 2) // 153
+    m = mp + 3 if mp < 10 else mp - 9
+    return yoe + era * 400 + (m <= 2), m, doy - (153 * mp + 2) // 5 + 1
 
 
-def _dtrue(cond: Column) -> Column:
-    """The reference's ``details[k] = True`` shape: "true" when cond."""
-    return F.when(cond, F.lit("true"))
+def _iso(days: int) -> str:
+    """date_format(d, 'yyyy-MM-dd')"""
+    y, m, d = _ymd(days)
+    yyyy = f"{y:04d}" if 0 <= y <= 9999 else (f"+{y}" if y > 0 else f"-{-y:04d}")
+    return f"{yyyy}-{m:02d}-{d:02d}"
 
 
-def _dbool(present: Column, true_cond: Column) -> Column:
-    """``details[k] = <bool>`` shape: both values emitted."""
-    return F.when(present, F.when(true_cond, "true").otherwise("false"))
+def _mmdd(days: int, sep: str) -> str:
+    _y, m, d = _ymd(days)
+    return f"{m:02d}{sep}{d:02d}"
 
 
-def _d1f(cond: Column, x: Column) -> Column:
-    """The reference's ``details[k] = round(x, 1)`` shape."""
-    return F.when(cond, F.format_number(x, 1))
+def _age(ref: int, dob: int) -> int:
+    """Exact reference age algorithm (age_validator.py:36-38): year diff
+    minus (month, day) tuple comparison — NOT months_between."""
+    ry, rm, rd = _ymd(ref)
+    by, bm, bd = _ymd(dob)
+    return ry - by - ((rm, rd) < (bm, bd))
 
 
-# ---------------------------------------------------- literal-struct helpers
+_D1985 = 5479  # unix_date('1985-01-01')
 
 
-def _lit_s(v) -> Column:  # noqa: ANN001
-    return F.lit(v) if v is not None else F.lit(None).cast("string")
+def _res(name: str, status: str, message: str | None, details: dict) -> dict:
+    return {"validator_name": name, "status": status, "message": message,
+            "details": list(details.items())}
 
 
-def _lit_i(v) -> Column:  # noqa: ANN001
-    return F.lit(int(v)) if v is not None else F.lit(None).cast("int")
+def _skipped(name: str, missing: str, message: str | None = None) -> dict:
+    """Skip shape (base.py:41-53)."""
+    return _res(name, "skipped", message or f"Required fields missing: {missing}",
+                {"missing_fields": missing})
 
 
-def _lit_d(v) -> Column:  # noqa: ANN001
-    return F.lit(float(v)) if v is not None else F.lit(None).cast("double")
+def _typed(name: str, issues: list, warnings: list, fail_header: str | None,
+           warn_msg: str | None, pass_msg: str | None, details: dict) -> dict:
+    """Type-specific shape with the reference's FAILED > WARNING > PASSED
+    precedence (e.g. ontario_dl.py:231-258): the fail message joins the
+    issues (``f"{header} failed: {'; '.join(issues)}"``, :234), the
+    warning message is fixed (:245), and details gain the issues +
+    warnings copies on fail (the warnings key even when empty, :235-241)
+    or the warnings copy on warn."""
+    if issues:
+        joined = _join(issues)
+        details.update(issues=joined, warnings=_join(warnings))
+        return _res(name, "failed", _cat(fail_header, ": ", joined), details)
+    if warnings:
+        details["warnings"] = _join(warnings)
+        return _res(name, "warning", warn_msg, details)
+    return _res(name, "passed", pass_msg, details)
 
 
-def _lit_b(v) -> Column:  # noqa: ANN001
-    return F.lit(bool(v))
+def _iw(out: list, cond: bool, msg) -> None:  # noqa: ANN001
+    """Append ``msg`` (a string or a thunk) when ``cond`` holds."""
+    if cond:
+        out.append(msg() if callable(msg) else msg)
 
 
-def _pick(arr: Column, build) -> Column:  # noqa: ANN001
-    """Bind the (0- or 1-element) config array via a transform lambda and
-    build the result; NULL when the array is empty. The lambda variable is
-    bound once, so ``build``'s expression tree appears exactly once in the
-    plan regardless of how many configs exist."""
-    return F.try_element_at(F.transform(arr, build), F.lit(1))
-
-
-# ------------------------------------------------------------- primitives
+# ------------------------------------------------------- date parsing (Spark)
 
 
 def parse_date_expr(col: Column) -> Column:
@@ -197,358 +259,90 @@ def parse_date_expr(col: Column) -> Column:
     return F.coalesce(*attempts)
 
 
-def _age_expr(ref: Column, dob: Column) -> Column:
-    """Exact reference age algorithm (age_validator.py:36-38):
-    year diff minus (month, day) tuple comparison — NOT months_between."""
-    tuple_lt = (F.month(ref) < F.month(dob)) | (
-        (F.month(ref) == F.month(dob)) & (F.dayofmonth(ref) < F.dayofmonth(dob))
-    )
-    return F.year(ref) - F.year(dob) - F.when(tuple_lt, 1).otherwise(0)
-
-
-def _blank(col: Column) -> Column:
-    return col.isNull() | (F.trim(col) == F.lit(""))
-
-
-def _iw(cond: Column, msg: Column | str) -> Column:
-    """Conditional singleton message array."""
-    m = F.lit(msg) if isinstance(msg, str) else msg
-    return F.when(cond, F.array(m)).otherwise(_empty_arr())
-
-
-def _result(name: str | Column, issues: list[Column], warnings: list[Column],
-            fail_msg: str | Column, warn_msg: str | Column, pass_msg: str | Column,
-            skip_cond: Column | None = None, skip_msg: str | Column = "",
-            details=None, join_issues: bool = True,  # noqa: ANN001
-            copy_iw: bool = True, skip_details: Column | None = None,
-            inline_bind: bool = False) -> Column:
-    """Assemble a ValidatorResult struct with the reference's
-    FAILED > WARNING > PASSED precedence (e.g. ontario_dl.py:231-258).
-    The issue/warning arrays are bound once (status + message both read
-    them; unbound they would be evaluated twice per row).
-
-    ``join_issues=True`` is the type-specific-validator shape
-    (``f"{header} failed: {'; '.join(issues)}"``, ontario_dl.py:234,
-    with the warning message a fixed string, :245); ``join_issues=
-    False`` is the base-validator shape where each branch carries a
-    complete message (document_expiry.py:37-64: the fail/warn/pass
-    messages are used verbatim, issues only drive the status).
-
-    ``details`` is a map Column or a callable ``(pi, pw) -> Column``
-    receiving the BOUND issue/warning arrays (for keys that depend on
-    the final verdict, e.g. verifik_api_skipped_reason,
-    ontario_dl.py:226). ``copy_iw=True`` is the type-specific spread
-    (fail: details + issues + warnings — warnings key even when the
-    list is empty, ontario_dl.py:235-241; warn: details + warnings);
-    base validators pass branch-complete details with copy_iw=False.
-    ``skip_details`` replaces details on the skip branch
-    ({"missing_fields": ...}, base.py:49-53)."""
-    from webxtract.exprs import bind_once
-
-    def _c(v):  # noqa: ANN001
-        return F.lit(v) if isinstance(v, str) else v
-
-    iss = F.flatten(F.array(*issues)) if issues else _empty_arr()
-    wrn = F.flatten(F.array(*warnings)) if warnings else _empty_arr()
-
-    def build(p: Column) -> Column:
-        pi, pw = p["iss"], p["wrn"]
-        status = (
-            F.when(F.size(pi) > 0, "failed")
-            .when(F.size(pw) > 0, "warning")
-            .otherwise("passed")
-        )
-        if join_issues:
-            fail_full = F.concat(_c(fail_msg), F.lit(": "), F.array_join(pi, "; "))
-            warn_full = _c(warn_msg)
-        else:
-            fail_full, warn_full = _c(fail_msg), _c(warn_msg)
-        message = (
-            F.when(F.size(pi) > 0, fail_full)
-            .when(F.size(pw) > 0, warn_full)
-            .otherwise(_c(pass_msg))
-        )
-        if skip_cond is not None:
-            status = F.when(skip_cond, "skipped").otherwise(status)
-            message = F.when(skip_cond, _c(skip_msg)).otherwise(message)
-        det = details(pi, pw) if callable(details) else details
-        det = det if det is not None else _empty_map()
-        if copy_iw:
-            det = F.when(
-                F.size(pi) > 0,
-                F.map_concat(
-                    det,
-                    F.create_map(
-                        F.lit("issues"), F.array_join(pi, "; "),
-                        F.lit("warnings"), F.array_join(pw, "; "),
-                    ),
-                ),
-            ).when(
-                F.size(pw) > 0,
-                F.map_concat(det, F.create_map(F.lit("warnings"), F.array_join(pw, "; "))),
-            ).otherwise(det)
-        if skip_cond is not None:
-            det = F.when(
-                skip_cond,
-                skip_details if skip_details is not None else _empty_map(),
-            ).otherwise(det)
-        return F.struct(
-            _c(name).alias("validator_name"),
-            status.alias("status"),
-            message.alias("message"),
-            det.alias("details"),
-        )
-
-    # ``inline_bind``: skip the bind_once HOF so the result struct stays
-    # a codegen-able expression. ONLY valid when the validator sits
-    # directly in a projection (the base five): there
-    # SimplifyExtractValueOps inlines the struct fields and codegen's
-    # common-subexpression elimination restores eval-once semantics.
-    # Inside an interpreted HOF lambda (the _pick-dispatched families)
-    # inlining would RE-EVALUATE iss/wrn per reference — those keep the
-    # bind_once form.
-    if inline_bind:
-        return build(F.struct(iss.alias("iss"), wrn.alias("wrn")))
-    return bind_once(F.struct(iss.alias("iss"), wrn.alias("wrn")), build)
-
-
-def _last_name_param(variant: Column, prefix: str) -> Column:
-    """The three last-name extraction variants (SURVEY.md §2.5), selected
-    per row by the config's ``name_variant``:
-    - "first_word": comma-part else FIRST word else last_name field
-      (ontario_dl.py:28-59; also QC/MB/NS/NL)
-    - "bc": comma-part else last_name field else LAST word (bc_dl.py:27-53)
-    - "field_first": last_name field else comma-part else LAST word
-      (california_dl.py:23-39; also TX, US)
-    """
-    full = F.coalesce(F.col(prefix + "full_name"), F.lit(""))
-    last_field = F.trim(F.coalesce(F.col(prefix + "last_name"), F.lit("")))
-    comma_part = F.trim(F.element_at(F.split(full, ",", 2), 1))
-    words = F.split(F.trim(full), r"\s+")
-    first_word = F.trim(F.element_at(words, 1))
-    last_word = F.trim(F.element_at(words, -1))
-    has_comma = full.contains(",")
-
-    fw = (
-        F.when((full != "") & has_comma & (comma_part != ""), comma_part)
-        .when((full != "") & ~has_comma & (first_word != ""), first_word)
-        .when(last_field != "", last_field)
-        .otherwise(F.lit(""))
-    )
-    bc = (
-        F.when((full != "") & has_comma & (comma_part != ""), comma_part)
-        .when(last_field != "", last_field)
-        .when((full != "") & (F.size(words) >= 2), last_word)
-        .otherwise(F.lit(""))
-    )
-    ff = (
-        F.when(last_field != "", last_field)
-        .when((full != "") & has_comma, comma_part)
-        .when((full != "") & (F.size(words) >= 2), last_word)
-        .otherwise(F.lit(""))
-    )
-    return (
-        F.when(variant == "first_word", fw)
-        .when(variant == "bc", bc)
-        .when(variant == "field_first", ff)
-        .otherwise(F.lit(""))
-    )
-
-
-def _last_name_src_param(variant: Column, prefix: str) -> Column:
-    """Source label matching _last_name_param's chosen branch — the
-    reference interpolates it into the first-letter mismatch issue
-    ("... (from {name_source})", ontario_dl.py:104-107; labels
-    :47-59, california_dl.py:27-39)."""
-    full = F.coalesce(F.col(prefix + "full_name"), F.lit(""))
-    last_field = F.trim(F.coalesce(F.col(prefix + "last_name"), F.lit("")))
-    comma_part = F.trim(F.element_at(F.split(full, ",", 2), 1))
-    words = F.split(F.trim(full), r"\s+")
-    first_word = F.trim(F.element_at(words, 1))
-    has_comma = full.contains(",")
-
-    fw = (
-        F.when((full != "") & has_comma & (comma_part != ""), "full_name_comma_format")
-        .when((full != "") & ~has_comma & (first_word != ""), "full_name_first_word")
-        .when(last_field != "", "last_name_field")
-        .otherwise(F.lit("not_found"))
-    )
-    bc = (
-        # BC's comma-branch label is "full_name_parsed", not the
-        # "full_name_comma_format" of the first_word family (bc_dl.py:40)
-        F.when((full != "") & has_comma & (comma_part != ""), "full_name_parsed")
-        .when(last_field != "", "last_name_field")
-        .when((full != "") & (F.size(words) >= 2), "full_name_last_word")
-        .otherwise(F.lit("not_found"))
-    )
-    ff = (
-        F.when(last_field != "", "last_name_field")
-        .when((full != "") & has_comma, "full_name_parsed")
-        .when((full != "") & (F.size(words) >= 2), "full_name_last_word")
-        .otherwise(F.lit("not_found"))
-    )
-    return (
-        F.when(variant == "first_word", fw)
-        .when(variant == "bc", bc)
-        .when(variant == "field_first", ff)
-        .otherwise(F.lit("not_found"))
-    )
-
-
-# Pre-parsed date columns: parsing the three date fields once per row and
-# letting every validator reference the resulting attribute keeps the
-# expression tree linear (inlining the 33-format parse at each of the
-# ~60 use sites blows up plan analysis).
+# Pre-parsed date columns: each date field is parsed once per row by
+# Spark and the kernel reads the parsed values.
 DOB_COL, ISSUE_COL, EXP_COL = "__dob_d", "__issue_d", "__exp_d"
 
 
 @gateway_cached(maxsize=4)
-def _parsed_date_exprs(prefix: str) -> dict:
+def _parsed_date_exprs() -> dict:
     return {
-        DOB_COL: parse_date_expr(F.col(prefix + "date_of_birth")),
-        ISSUE_COL: parse_date_expr(F.col(prefix + "issue_date")),
-        EXP_COL: parse_date_expr(F.col(prefix + "expiry_date")),
+        DOB_COL: parse_date_expr(F.col("date_of_birth")),
+        ISSUE_COL: parse_date_expr(F.col("issue_date")),
+        EXP_COL: parse_date_expr(F.col("expiry_date")),
     }
 
 
-def with_parsed_dates(df, prefix: str = ""):
-    return df.withColumns(_parsed_date_exprs(prefix))
-
-
-def _dates():
-    return F.col(DOB_COL), F.col(ISSUE_COL), F.col(EXP_COL)
+def with_parsed_dates(df):  # noqa: ANN001, ANN201
+    return df.withColumns(_parsed_date_exprs())
 
 
 # ------------------------------------------------------------- base five
 
 
-def data_consistency_validator(run_date: Column, prefix: str = "") -> Column:
+def _data_consistency(r: dict) -> dict:
     """V1 (validators/data_consistency.py:13-72)."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    skip = _blank(col("date_of_birth")) | _blank(col("expiry_date"))
-    dob, issue, exp = _dates()
-    age = F.floor(F.datediff(run_date, dob) / 365)
-    validity = F.floor(F.datediff(exp, issue) / 365)
-    issues = [
-        _iw(dob.isNotNull() & issue.isNotNull() & (dob >= issue),
-            "Date of birth is not before issue date"),
-        _iw(issue.isNotNull() & exp.isNotNull() & (issue >= exp),
-            "Issue date is not before expiry date"),
-        _iw(dob.isNotNull() & ((age > 150) | (age < 0)),
-            F.concat(F.lit("Unrealistic age calculated: "), age.cast("string"), F.lit(" years"))),
-        _iw(issue.isNotNull() & exp.isNotNull() & (validity > 50),
-            F.concat(F.lit("Unusual document validity period: "), validity.cast("string"), F.lit(" years"))),
-    ]
-    # skip message lists the actually-missing fields (base.py:41-53)
-    skip_msg = F.concat(
-        F.lit("Required fields missing: "),
-        F.array_join(
-            F.concat(
-                F.when(_blank(col("date_of_birth")), F.array(F.lit("date_of_birth")))
-                .otherwise(_empty_arr()),
-                F.when(_blank(col("expiry_date")), F.array(F.lit("expiry_date")))
-                .otherwise(_empty_arr()),
-            ),
-            ", ",
-        ),
-    )
-    missing_det = F.array_join(
-        F.concat(
-            F.when(_blank(col("date_of_birth")), F.array(F.lit("date_of_birth")))
-            .otherwise(_empty_arr()),
-            F.when(_blank(col("expiry_date")), F.array(F.lit("expiry_date")))
-            .otherwise(_empty_arr()),
-        ),
-        "; ",
-    )
-    return _result(
-        "data_consistency", issues, [],
-        # fail message is the fixed string (data_consistency.py:63);
-        # the issue texts go to details in the reference, not the message
-        "Data consistency issues found", "",
-        "All date relationships are consistent",
-        skip_cond=skip, skip_msg=skip_msg, join_issues=False, copy_iw=False,
-        # fail -> {"issues": [...]} only; pass -> {} (data_consistency.py:64-72)
-        details=lambda pi, pw: _dmap(
-            ("issues", _dv(F.size(pi) > 0, F.array_join(pi, "; "))),
-        ),
-        skip_details=_dmap(("missing_fields", missing_det)),
-        inline_bind=True,
-    )
+    missing = [f for f in ("date_of_birth", "expiry_date") if _blank(r[f])]
+    if missing:
+        # the skip message lists the actually-missing fields (base.py:41-53)
+        return _skipped("data_consistency", "; ".join(missing),
+                        "Required fields missing: " + ", ".join(missing))
+    dob, issue, exp, run = r["dob"], r["issue"], r["exp"], r["run"]
+    issues: list = []
+    _iw(issues, dob is not None and issue is not None and dob >= issue,
+        "Date of birth is not before issue date")
+    _iw(issues, issue is not None and exp is not None and issue >= exp,
+        "Issue date is not before expiry date")
+    if dob is not None:
+        age = math.floor((run - dob) / 365)
+        _iw(issues, age > 150 or age < 0, f"Unrealistic age calculated: {age} years")
+    if issue is not None and exp is not None:
+        validity = math.floor((exp - issue) / 365)
+        _iw(issues, validity > 50,
+            f"Unusual document validity period: {validity} years")
+    if issues:
+        # fail message is the fixed string (data_consistency.py:63); the
+        # issue texts go to details, not the message (:64-72)
+        return _res("data_consistency", "failed", "Data consistency issues found",
+                    {"issues": _join(issues)})
+    return _res("data_consistency", "passed", "All date relationships are consistent", {})
 
 
-def document_expiry_validator(run_date: Column, prefix: str = "") -> Column:
-    """V2 (validators/document_expiry.py:13-64)."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    skip = _blank(col("expiry_date"))
-    _dob_u, _issue_u, exp = _dates()
-    days = F.datediff(exp, run_date)
-    issues = [_iw(exp.isNotNull() & (days < 0),
-                  F.concat(F.lit("Document expired "), F.abs(days).cast("string"), F.lit(" days ago")))]
-    warnings = [
-        _iw(exp.isNull(), "Could not parse expiry date format"),
-        _iw(exp.isNotNull() & (days >= 0) & (days < 30),
-            F.concat(F.lit("Document expires in "), days.cast("string"), F.lit(" days"))),
-    ]
-    # each branch carries its complete message (document_expiry.py:37-64)
-    fail_msg = F.concat(F.lit("Document expired "), F.abs(days).cast("string"),
-                        F.lit(" days ago"))
-    warn_msg = F.when(exp.isNull(), F.lit("Could not parse expiry date format")).otherwise(
-        F.concat(F.lit("Document expires in "), days.cast("string"), F.lit(" days"))
-    )
-    pass_msg = F.concat(F.lit("Document valid for "), days.cast("string"), F.lit(" days"))
-    # branch-complete details (document_expiry.py:28,39-46,49-56,59-64)
-    det = _dmap(
-        ("raw_expiry_date", _dv(exp.isNull(), F.coalesce(col("expiry_date"), F.lit("")))),
-        ("expiry_date", _dv(exp.isNotNull(), F.date_format(exp, "yyyy-MM-dd"))),
-        ("days_expired", _dv(exp.isNotNull() & (days < 0), F.abs(days).cast("string"))),
-        ("days_until_expiry", _dv(exp.isNotNull() & (days >= 0), days.cast("string"))),
-    )
-    return _result(
-        "document_expiry", issues, warnings,
-        fail_msg, warn_msg, pass_msg,
-        skip_cond=skip, skip_msg="Required fields missing: expiry_date",
-        join_issues=False, copy_iw=False, details=det,
-        skip_details=_dmap(("missing_fields", "expiry_date")),
-        inline_bind=True,
-    )
+def _document_expiry(r: dict) -> dict:
+    """V2 (validators/document_expiry.py:13-64): each branch carries its
+    complete message and details."""
+    if _blank(r["expiry_date"]):
+        return _skipped("document_expiry", "expiry_date")
+    exp = r["exp"]
+    if exp is None:
+        return _res("document_expiry", "warning", "Could not parse expiry date format",
+                    {"raw_expiry_date": _s(r["expiry_date"])})
+    days = exp - r["run"]
+    det = {"expiry_date": _iso(exp)}
+    if days < 0:
+        det["days_expired"] = str(-days)
+        return _res("document_expiry", "failed", f"Document expired {-days} days ago", det)
+    det["days_until_expiry"] = str(days)
+    if days < 30:
+        return _res("document_expiry", "warning", f"Document expires in {days} days", det)
+    return _res("document_expiry", "passed", f"Document valid for {days} days", det)
 
 
-def age_validator(run_date: Column, minimum_age: int, prefix: str = "") -> Column:
+def _age_validation(r: dict) -> dict:
     """V3 (validators/age_validator.py:16-60) — warn (not fail) under min."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    skip = _blank(col("date_of_birth"))
-    dob, _issue_u, _exp_u = _dates()
-    age = _age_expr(run_date, dob)
-    warnings = [
-        _iw(dob.isNull(), "Could not parse date of birth format"),
-        _iw(dob.isNotNull() & (age < minimum_age),
-            F.concat(F.lit("Person is "), age.cast("string"),
-                     F.lit(f" years old, minimum required is {minimum_age}"))),
-    ]
-    # branch messages verbatim (age_validator.py:27-60)
-    warn_msg = F.when(dob.isNull(), F.lit("Could not parse date of birth format")).otherwise(
-        F.concat(F.lit("Person is "), age.cast("string"),
-                 F.lit(f" years old, minimum required is {minimum_age}"))
-    )
-    pass_msg = F.concat(F.lit("Age verification passed ("), age.cast("string"),
-                        F.lit(" years old)"))
-    # branch-complete details (age_validator.py:31,44-48,55-58)
-    det = _dmap(
-        ("raw_dob", _dv(dob.isNull(), F.coalesce(col("date_of_birth"), F.lit("")))),
-        ("calculated_age", _dv(dob.isNotNull(), age.cast("string"))),
-        ("minimum_age", _dv(dob.isNotNull(), str(minimum_age))),
-        ("date_of_birth",
-         _dv(dob.isNotNull() & (age < minimum_age), F.date_format(dob, "yyyy-MM-dd"))),
-    )
-    return _result(
-        "age_validation", [], warnings,
-        "", warn_msg, pass_msg,
-        skip_cond=skip, skip_msg="Required fields missing: date_of_birth",
-        join_issues=False, copy_iw=False, details=det,
-        skip_details=_dmap(("missing_fields", "date_of_birth")),
-        inline_bind=True,
-    )
+    if _blank(r["date_of_birth"]):
+        return _skipped("age_validation", "date_of_birth")
+    dob, minimum_age = r["dob"], r["minimum_age"]
+    if dob is None:
+        return _res("age_validation", "warning", "Could not parse date of birth format",
+                    {"raw_dob": _s(r["date_of_birth"])})
+    age = _age(r["run"], dob)
+    det = {"calculated_age": str(age), "minimum_age": str(minimum_age)}
+    if age < minimum_age:
+        det["date_of_birth"] = _iso(dob)
+        return _res("age_validation", "warning",
+                    f"Person is {age} years old, minimum required is {minimum_age}", det)
+    return _res("age_validation", "passed", f"Age verification passed ({age} years old)", det)
 
 
 # 18 named patterns + descriptions (validators/document_format.py:13-38)
@@ -574,85 +368,81 @@ DOCUMENT_FORMAT_PATTERNS = [
 ]
 
 
-def document_format_validator(prefix: str = "") -> Column:
+def _document_format(r: dict) -> dict:
     """V4 (validators/document_format.py:40-82): PASS if any of the 18
-    patterns match raw or dash-stripped number, else WARN. The pattern
-    table is a constant-folded literal array — one exists() in the plan,
-    not 36 inlined rlikes.
-
-    Codegen shape: the match result (``matches``/``n_match``/``js``) is
-    shared across the warning condition, details entries, and pass
-    message by PROJECTION-LEVEL common-subexpression elimination —
-    this validator sits directly in the battery projection (no
-    bind_once wrapper), so codegen evaluates the 18x2-regex filter
-    exactly once per row while the whole subtree stays compilable.
-    (The filter lambda re-evaluates raw/clean per element, but those
-    are a trim/upper and one regexp_replace — noise next to the 36
-    pattern regexes the filter itself runs.)"""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    skip = _blank(col("document_number"))
-    raw_e = F.upper(F.trim(F.coalesce(col("document_number"), F.lit(""))))
-    clean = F.regexp_replace(raw_e, r"[\s\-]", "")
-    patterns = F.array(
-        *[
-            F.struct(
-                F.lit(name).alias("pattern_name"),
-                F.lit(p).alias("fmt"),
-                F.lit(desc).alias("description"),
-            )
-            for name, p, desc in DOCUMENT_FORMAT_PATTERNS
-        ]
-    )
-    matches = F.filter(
-        patterns,
-        lambda p: F.regexp_like(raw_e, p["fmt"])
-        | F.regexp_like(clean, p["fmt"]),
-    )
-    n_match = F.size(matches)
-    # matched (name, description) rows feed details.matched_patterns as
-    # compact JSON (the reference's list-of-dicts, :55-70); count feeds
-    # the pass message (document_format.py:64-70).
-    js = F.to_json(
-        F.transform(
-            matches,
-            lambda p: F.struct(
-                p["pattern_name"].alias("pattern_name"),
-                p["description"].alias("description"),
-            ),
-        )
-    )
-    warnings = [
-        _iw(n_match == 0, "Document number does not match common formats")
+    patterns match the raw or dash-stripped number, else WARN; the
+    matched (name, description) rows feed details.matched_patterns as
+    compact JSON (the reference's list-of-dicts, :55-70)."""
+    if _blank(r["document_number"]):
+        return _skipped("document_format", "document_number")
+    raw = _trim(_s(r["document_number"])).upper()
+    clean = _SEP.sub("", raw)
+    matches = [
+        {"pattern_name": name, "description": desc}
+        for name, p, desc in DOCUMENT_FORMAT_PATTERNS
+        if _rlike(raw, p) or _rlike(clean, p)
     ]
-    det = _dmap(
-        ("document_number", raw_e),
-        ("matched_patterns", _dv(n_match > 0, js)),
-        ("note", _dv(n_match == 0,
-                     "May still be valid - format not in known patterns")),
-    )
-    return _result(
-        "document_format", [], warnings,
-        "", "Document number does not match common formats",
-        F.concat(F.lit("Document number matches "), n_match.cast("string"),
-                 F.lit(" known format(s)")),
-        skip_cond=skip, skip_msg="Required fields missing: document_number",
-        join_issues=False, copy_iw=False, details=det,
-        skip_details=_dmap(("missing_fields", "document_number")),
-        inline_bind=True,
-    )
+    if not matches:
+        return _res("document_format", "warning",
+                    "Document number does not match common formats",
+                    {"document_number": raw,
+                     "note": "May still be valid - format not in known patterns"})
+    return _res("document_format", "passed",
+                f"Document number matches {len(matches)} known format(s)",
+                {"document_number": raw,
+                 "matched_patterns": json.dumps(matches, separators=(",", ":"))})
 
 
-def face_matching_validator() -> Column:
+_FACE_MATCHING = _res(
+    "face_matching", "skipped", "Face matching skipped - no selfie provided",
+    # face_matching.py:27-29
+    {"note": "Provide selfie image to enable face matching"},
+)
+
+
+def _face_matching(_r: dict) -> dict:
     """V5 (validators/face_matching.py:18-49): always SKIPPED (no selfie)."""
-    return F.struct(
-        F.lit("face_matching").alias("validator_name"),
-        F.lit("skipped").alias("status"),
-        F.lit("Face matching skipped - no selfie provided").alias("message"),
-        # face_matching.py:27-29
-        _dmap(("note", "Provide selfie image to enable face matching")).alias(
-            "details"
-        ),
-    )
+    return _FACE_MATCHING
+
+
+def _last_name(r: dict, variant: str | None) -> tuple[str, str]:
+    """(last name, source label) by the three extraction variants
+    (SURVEY.md §2.5); the label is interpolated into the first-letter
+    mismatch issue ("... (from {name_source})", ontario_dl.py:104-107):
+    - "first_word": comma-part else FIRST word else last_name field
+      (ontario_dl.py:28-59; also QC/MB/NS/NL)
+    - "bc": comma-part else last_name field else LAST word (bc_dl.py:27-53;
+      its comma label is "full_name_parsed", :40)
+    - "field_first": last_name field else comma-part else LAST word
+      (california_dl.py:23-39; also TX, US)
+    """
+    full = _s(r["full_name"])
+    last_field = _trim(_s(r["last_name"]))
+    comma_part = _trim(full.split(",", 1)[0])
+    words = _WS_RUN.split(_trim(full))
+    has_comma = "," in full
+    if variant == "first_word":
+        if full and has_comma and comma_part:
+            return comma_part, "full_name_comma_format"
+        if full and not has_comma and _trim(words[0]):
+            return _trim(words[0]), "full_name_first_word"
+        if last_field:
+            return last_field, "last_name_field"
+    elif variant == "bc":
+        if full and has_comma and comma_part:
+            return comma_part, "full_name_parsed"
+        if last_field:
+            return last_field, "last_name_field"
+        if full and len(words) >= 2:
+            return _trim(words[-1]), "full_name_last_word"
+    elif variant == "field_first":
+        if last_field:
+            return last_field, "last_name_field"
+        if full and has_comma:
+            return comma_part, "full_name_parsed"
+        if full and len(words) >= 2:
+            return _trim(words[-1]), "full_name_last_word"
+    return "", "not_found"
 
 
 # -------------------------------------------------------- DL family (V10-23, V44-45)
@@ -1106,10 +896,6 @@ DL_MSGS: dict[str, dict] = {
 }
 
 
-def _dl_msgs(name: str) -> dict:
-    return {**_DL_MSG_DEFAULTS, **DL_MSGS[name]}
-
-
 def _parse_near(spec: str | None) -> tuple[str | None, int | None, int | None]:
     if spec is None:
         return None, None, None
@@ -1121,446 +907,239 @@ def _parse_near(spec: str | None) -> tuple[str | None, int | None, int | None]:
     return "len", int(parts[1]), None
 
 
-def _dl_cfg_struct(c: DLConfig) -> Column:
-    kind, lo, hi = _parse_near(c.near_miss)
-    tiers = list(c.warn_age_tiers)
-    m = _dl_msgs(c.name)
-    msg_fields = [
-        _lit_s(m[k]).alias(f"m_{k}")
-        for k in (
-            "fail_header", "warn_full", "pass_full", "missing", "fmt_prefix",
-            "near_w1", "near_w2", "near_w3", "fl_head", "fl_mid",
-            "noname_head", "noname_tail", "age_fail_tail", "tier1_tail",
-            "tier2_tail", "bday_name", "bday_tail", "vshort_tail",
-            "vlong_head", "vlong_tail", "expired_head", "expires_head",
-            "soon_head", "issue_tail",
-        )
-    ] + [
-        _lit_b(m["fl_src"]).alias("m_fl_src"),
-        _lit_b(m["bday_std"]).alias("m_bday_std"),
-    ]
-    return F.struct(
-        *msg_fields,
-        _lit_s(c.name).alias("name"),
-        _lit_s(c.display).alias("display"),
-        _lit_s(c.format_pattern).alias("fmt"),
-        _lit_s(kind).alias("near_kind"),
-        _lit_i(lo).alias("near_lo"),
-        _lit_i(hi).alias("near_hi"),
-        _lit_i(c.fail_age).alias("fail_age"),
-        _lit_i(tiers[0] if tiers else None).alias("tier1"),
-        _lit_i(tiers[1] if len(tiers) > 1 else None).alias("tier2"),
-        _lit_s(c.name_variant).alias("name_variant"),
-        _lit_s(c.first_letter).alias("first_letter"),
-        _lit_b(c.ns_prefix).alias("ns_prefix"),
-        _lit_d(c.validity_low).alias("validity_low"),
-        _lit_d(c.validity_high).alias("validity_high"),
-        _lit_d(c.validity_div).alias("validity_div"),
-        _lit_b(c.expired_check).alias("expired_check"),
-        _lit_b(c.expiry_warn_60).alias("expiry_warn_60"),
-        _lit_i(c.issue_check_min_age).alias("issue_min"),
-        _lit_b(c.ontario_dob_encoding).alias("ont_dob"),
-        _lit_b(c.bc_prefix_strip).alias("bc_strip"),
-        _lit_b(c.strip_slash).alias("strip_slash"),
-        _lit_b(c.verifik).alias("verifik"),
-        _lit_s("; ".join(c.d_checks)).alias("d_checks"),
-        _lit_b(c.d_ln_src).alias("d_ln_src"),
-        _lit_s(c.d_num_key).alias("d_num_key"),
-        _lit_s(c.d_valid_key).alias("d_valid_key"),
-        _lit_s(c.d_digits).alias("d_digits"),
-        _lit_b(c.d_digits_near).alias("d_digits_near"),
-        _lit_b(c.d_letter).alias("d_letter"),
-        _lit_s(c.d_clean_key).alias("d_clean_key"),
-        _lit_s(c.d_fl).alias("d_fl"),
-        _lit_s(c.d_age_key).alias("d_age_key"),
-        _lit_b(c.d_age_dob).alias("d_age_dob"),
-        _lit_b(c.d_bday_both).alias("d_bday_both"),
-        _lit_s(c.d_state).alias("d_state"),
-    )
+# each province's complete message table (defaults + its overrides)
+_DL_M = {name: {**_DL_MSG_DEFAULTS, **msgs} for name, msgs in DL_MSGS.items()}
 
 
-def _dl_cfg_array() -> Column:
-    return F.array(*[_dl_cfg_struct(c) for c in DL_CONFIGS.values()])
+def _near_ok(kind: str | None, lo: int | None, hi: int | None, clean: str) -> bool:
+    """Near-miss number shapes shared by the DL and passport families."""
+    n = len(clean)
+    if kind == "digits":
+        return _rlike(clean, r"^\d+$") and lo <= n <= hi
+    if kind == "len_alpha":
+        return n == lo and _rlike(clean[:1], "[A-Z]")
+    if kind == "len":
+        return n == lo
+    if kind == "france":
+        return _rlike(clean, r"^[A-Z0-9]{9}$")
+    if kind == "len_egd":
+        return n == lo and clean[:1] in ("E", "G", "D")
+    if kind == "len89_alpha2":
+        return n in (8, 9) and _rlike(clean[:2], r"^[A-Z]{2}$")
+    if kind == "len_alpha2":
+        return n == lo and _rlike(clean[:2], r"^[A-Z]{2}$")
+    if kind == "minlen_alpha":
+        return n >= lo and _rlike(clean[:1], "[A-Z]")
+    return False
 
 
-def _dl_result(cfg: Column, run_date: Column, prefix: str = "") -> Column:
-    """One parametrized DL validator over a bound config struct — the
-    single-copy form of the 15 per-province validators (SURVEY.md §2.5
-    V10-V23/V44-V45; the per-file logic differs only in the constants
-    carried by ``cfg``). The derived per-row values (cleaned number,
-    extracted last name, ages, validity, days-to-expiry) are bound once
-    and referenced as lambda variables."""
-    from webxtract.exprs import bind_once
-
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    raw_e = F.upper(F.trim(F.coalesce(col("document_number"), F.lit(""))))
-
+def _dl(c: DLConfig, r: dict) -> dict:
+    """One parametrized DL validator over a config row — the single-copy
+    form of the 15 per-province validators (SURVEY.md §2.5 V10-V23/
+    V44-V45; the per-file logic differs only in the constants carried by
+    ``c`` and its DL_MSGS entry)."""
+    m = _DL_M[c.name]
+    run, dob, issue_d, exp = r["run"], r["dob"], r["issue"], r["exp"]
+    raw = _trim(_s(r["document_number"])).upper()
     # NDL:/NDL/DL:/DL prefix strip for BC (bc_dl.py:74-96); Manitoba also
     # strips "/" (manitoba_dl.py:70-76); default strips spaces/dashes.
-    bc_clean = (
-        F.when(raw_e.startswith("NDL:"), F.trim(F.substring(raw_e, 5, 100)))
-        .when(raw_e.startswith("NDL"), F.trim(F.substring(raw_e, 4, 100)))
-        .when(raw_e.startswith("DL:"), F.trim(F.substring(raw_e, 4, 100)))
-        .when(raw_e.startswith("DL"), F.trim(F.substring(raw_e, 3, 100)))
-        .otherwise(F.regexp_replace(raw_e, r"[\s\-]", ""))
-    )
-    clean_e = (
-        F.when(cfg["bc_strip"], bc_clean)
-        .when(cfg["strip_slash"], F.regexp_replace(raw_e, r"[\s\-/]", ""))
-        .otherwise(F.regexp_replace(raw_e, r"[\s\-]", ""))
-    )
-    dob_e, issue_e, exp_e = _dates()
-    derived = F.struct(
-        raw_e.alias("raw"),
-        clean_e.alias("clean"),
-        # messages interpolate the document number as given, not the
-        # upper-trimmed working copy (e.g. ontario_dl.py:89 "Got:
-        # {document_number}")
-        F.coalesce(col("document_number"), F.lit("")).alias("disp"),
-        _last_name_param(cfg["name_variant"], prefix).alias("last_name"),
-        _last_name_src_param(cfg["name_variant"], prefix).alias("name_src"),
-        _age_expr(run_date, dob_e).alias("age"),
-        _age_expr(issue_e, dob_e).alias("age_at_issue"),
-        (F.datediff(exp_e, issue_e) / cfg["validity_div"]).alias("validity"),
-        F.datediff(exp_e, run_date).alias("days"),
-    )
-    return bind_once(derived, lambda v: _dl_body(cfg, v, run_date, prefix))
+    if c.bc_prefix_strip and raw.startswith(("NDL", "DL")):
+        cut = 4 if raw.startswith("NDL:") else 3 if raw.startswith(("NDL", "DL:")) else 2
+        clean = _trim(raw[cut:cut + 100])
+    elif c.strip_slash:
+        clean = _SEP_SLASH.sub("", raw)
+    else:
+        clean = _SEP.sub("", raw)
+    # messages interpolate the document number as given, not the
+    # upper-trimmed working copy (e.g. ontario_dl.py:89 "Got: {number}")
+    disp = _s(r["document_number"])
+    last_name, name_src = _last_name(r, c.name_variant)
+    has_dob = dob is not None
+    age = _age(run, dob) if has_dob else None
+    tiers = c.warn_age_tiers
+    tier1 = tiers[0] if tiers else None
+    tier2 = tiers[1] if len(tiers) > 1 else None
 
-
-def _dl_body(cfg: Column, v: Column, run_date: Column, prefix: str) -> Column:
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    raw, clean = v["raw"], v["clean"]
-
-    issues: list[Column] = []
-    warnings: list[Column] = []
+    issues: list = []
+    warnings: list = []
 
     # check 1: number format. The pattern is evaluated against the raw
     # upper-trimmed number AND the stripped one — the Ontario pattern
     # requires its hyphens (ontario_dl.py:79 matches the un-stripped
     # number), every other config's digits-only pattern matches the
-    # stripped form; a raw match is never spurious because only the
-    # Ontario pattern contains separators.
-    fmt_ok = F.regexp_like(raw, cfg["fmt"]) | F.regexp_like(clean, cfg["fmt"])
-    near = (
-        F.when(
-            cfg["near_kind"] == "digits",
-            clean.rlike(r"^\d+$")
-            & (F.length(clean) >= cfg["near_lo"])
-            & (F.length(clean) <= cfg["near_hi"]),
-        )
-        .when(
-            cfg["near_kind"] == "len_alpha",
-            (F.length(clean) == cfg["near_lo"])
-            & F.substring(clean, 1, 1).rlike("[A-Z]"),
-        )
-        .when(cfg["near_kind"] == "len", F.length(clean) == cfg["near_lo"])
-        .otherwise(F.lit(False))
-    )
-    disp = v["disp"]
-    issues.append(_iw(clean == "", cfg["m_missing"]))
-    issues.append(
-        _iw((clean != "") & ~fmt_ok & ~near,
-            F.concat(cfg["m_fmt_prefix"], disp))
-    )
+    # stripped form.
+    fmt_ok = _rlike(raw, c.format_pattern) or _rlike(clean, c.format_pattern)
+    near = _near_ok(*_parse_near(c.near_miss), clean)
+    _iw(issues, clean == "", m["missing"])
+    _iw(issues, clean != "" and not fmt_ok and not near, lambda: _cat(m["fmt_prefix"], disp))
     # near-miss warning: digit-count shape when near_w3 is set
     # (bc_dl.py:111-114), free shape otherwise (ontario_dl.py:87,
     # quebec_dl.py:89-92)
-    near_msg = F.when(
-        cfg["m_near_w3"].isNotNull(),
-        F.concat(cfg["m_near_w1"], disp, cfg["m_near_w2"],
-                 F.length(clean).cast("string"), cfg["m_near_w3"]),
-    ).otherwise(F.concat(cfg["m_near_w1"], disp, cfg["m_near_w2"]))
-    warnings.append(_iw((clean != "") & ~fmt_ok & near, near_msg))
+    _iw(warnings, clean != "" and not fmt_ok and near, lambda: (
+        _cat(m["near_w1"], disp, m["near_w2"], str(len(clean)), m["near_w3"])
+        if m["near_w3"] is not None else _cat(m["near_w1"], disp, m["near_w2"])))
 
-    # first-letter / NS-prefix name checks
-    last_name = v["last_name"]
-    letter = F.substring(clean, 1, 1)
-    has_fl = cfg["first_letter"].isNotNull()
-    # reference compares clean_number[0] unconditionally once the number
-    # is non-empty (ontario_dl.py:95-114) — no alpha gate
-    cond_mismatch = (
-        has_fl
-        & (clean != "")
-        & (last_name != "")
-        & (letter != F.upper(F.substring(last_name, 1, 1)))
-    )
-    cond_noname = has_fl & (clean != "") & (last_name == "")
-    fl_msg = F.concat(
-        cfg["m_fl_head"], letter, cfg["m_fl_mid"],
-        F.upper(F.substring(last_name, 1, 1)), F.lit("'"),
-        F.when(cfg["m_fl_src"],
-               F.concat(F.lit(" (from "), v["name_src"], F.lit(")")))
-        .otherwise(F.lit("")),
-    )
-    issues.append(_iw(cond_mismatch & (cfg["first_letter"] == "fail"), fl_msg))
-    warnings.append(_iw(cond_mismatch & (cfg["first_letter"] == "warn"), fl_msg))
-    warnings.append(
-        _iw(cond_noname & cfg["m_noname_head"].isNotNull(),
-            F.concat(cfg["m_noname_head"], letter, cfg["m_noname_tail"]))
-    )
+    # first-letter / NS-prefix name checks; the reference compares
+    # clean_number[0] unconditionally once the number is non-empty
+    # (ontario_dl.py:95-114) — no alpha gate
+    letter = clean[:1]
+    ln_initial = last_name[:1].upper()
+    if c.first_letter is not None and clean != "":
+        if last_name != "" and letter != ln_initial:
+            fl_msg = _cat(m["fl_head"], letter, m["fl_mid"], ln_initial, "'",
+                          f" (from {name_src})" if m["fl_src"] else "")
+            _iw(issues, c.first_letter == "fail", fl_msg)
+            _iw(warnings, c.first_letter == "warn", fl_msg)
+        _iw(warnings, last_name == "" and m["noname_head"] is not None,
+            lambda: _cat(m["noname_head"], letter, m["noname_tail"]))
     # surname -> 5-letter X-padded prefix; warn on first-letter mismatch
     # only (nova_scotia_dl.py:51-60,106-120)
-    ln_clean = F.regexp_replace(F.upper(last_name), "[^A-Z]", "")
-    expected = F.rpad(F.substring(ln_clean, 1, 5), 5, "X")
-    warnings.append(
-        _iw(
-            cfg["ns_prefix"] & (clean != "") & (F.length(clean) >= 5)
-            & (last_name != "")
-            & (F.substring(clean, 1, 1) != F.substring(expected, 1, 1)),
-            F.concat(F.lit("Licence prefix '"), F.substring(clean, 1, 5),
-                     F.lit("' may not match surname '"), last_name, F.lit("'")),
-        )
-    )
+    expected = _NON_AZ.sub("", last_name.upper())[:5].ljust(5, "X")
+    ns_gate = c.ns_prefix and clean != "" and len(clean) >= 5 and last_name != ""
+    _iw(warnings, ns_gate and clean[:1] != expected[:1],
+        lambda: f"Licence prefix '{clean[:5]}' may not match surname '{last_name}'")
 
     # minimum-age tiers
-    dob, issue_d, exp = _dates()
-    age = v["age"]
-    has_dob = dob.isNotNull()
-    issues.append(
-        _iw(has_dob & (age < cfg["fail_age"]),
-            F.concat(F.lit("Person is "), age.cast("string"),
-                     cfg["m_age_fail_tail"]))
-    )
-    warnings.append(
-        _iw(cfg["tier1"].isNotNull() & has_dob
-            & (age >= cfg["fail_age"]) & (age < cfg["tier1"]),
-            F.concat(F.lit("Person is "), age.cast("string"), F.lit(". "),
-                     cfg["m_tier1_tail"]))
-    )
-    warnings.append(
-        _iw(cfg["tier2"].isNotNull() & has_dob
-            & (age >= cfg["tier1"]) & (age < cfg["tier2"]),
-            F.concat(F.lit("Person is "), age.cast("string"), F.lit(". "),
-                     cfg["m_tier2_tail"]))
-    )
+    if has_dob:
+        _iw(issues, age < c.fail_age, lambda: _cat(f"Person is {age}", m["age_fail_tail"]))
+        _iw(warnings, tier1 is not None and c.fail_age <= age < tier1,
+            lambda: _cat(f"Person is {age}. ", m["tier1_tail"]))
+        _iw(warnings, tier2 is not None and tier1 <= age < tier2,
+            lambda: _cat(f"Person is {age}. ", m["tier2_tail"]))
 
     # expiry-on-birthday (warn). Two shapes: the Canadian "Expiry date
     # (MM-dd) is not on birthday (MM-dd). ..." (ontario_dl.py:139-142)
     # and the CA/TX "X typically expires on birthday. DOB: MM/dd,
     # Expiry: MM/dd" (california_dl.py:130-133).
-    bday_msg = F.when(
-        cfg["m_bday_std"],
-        F.concat(F.lit("Expiry date ("), F.date_format(exp, "MM-dd"),
-                 F.lit(") is not on birthday ("), F.date_format(dob, "MM-dd"),
-                 F.lit("). "), cfg["m_bday_tail"]),
-    ).otherwise(
-        F.concat(cfg["m_bday_name"],
-                 F.lit(" typically expires on birthday. DOB: "),
-                 F.date_format(dob, "MM/dd"), F.lit(", Expiry: "),
-                 F.date_format(exp, "MM/dd"))
-    )
-    warnings.append(
-        _iw(
-            has_dob & exp.isNotNull()
-            & ((F.month(dob) != F.month(exp)) | (F.dayofmonth(dob) != F.dayofmonth(exp))),
-            bday_msg,
-        )
-    )
+    bday_known = has_dob and exp is not None
+    bday_match = bday_known and _mmdd(dob, "-") == _mmdd(exp, "-")
+    _iw(warnings, bday_known and not bday_match, lambda: (
+        _cat(f"Expiry date ({_mmdd(exp, '-')}) is not on birthday ({_mmdd(dob, '-')}). ",
+             m["bday_tail"])
+        if m["bday_std"] else
+        _cat(m["bday_name"], " typically expires on birthday. DOB: ", _mmdd(dob, "/"),
+             ", Expiry: ", _mmdd(exp, "/"))))
 
-    # validity window (warn)
-    validity = v["validity"]
-    has_validity = issue_d.isNotNull() & exp.isNotNull()
-    # {validity_years:.1f} — format_number(v, 1) matches Python's %.1f
-    # for every non-tie value (ties are unreachable: validity is
-    # days/365[.25], never an exact multiple of 0.05)
-    v1 = F.format_number(validity, 1)
-    warnings.append(
-        _iw(cfg["validity_low"].isNotNull() & has_validity
-            & (validity < cfg["validity_low"]),
-            F.concat(F.lit("Short validity period ("), v1,
-                     F.lit(" years). "), cfg["m_vshort_tail"]))
-    )
-    warnings.append(
-        _iw(cfg["validity_high"].isNotNull() & has_validity
-            & (validity > cfg["validity_high"]),
-            F.concat(cfg["m_vlong_head"], v1, cfg["m_vlong_tail"]))
-    )
+    # validity window (warn); {validity_years:.1f} — ties are unreachable
+    # (validity is days/365[.25], never an exact multiple of 0.05)
+    has_validity = issue_d is not None and exp is not None
+    validity = (exp - issue_d) / c.validity_div if has_validity else None
+    if has_validity:
+        v1 = _f1(validity)
+        _iw(warnings, c.validity_low is not None and validity < c.validity_low,
+            lambda: _cat(f"Short validity period ({v1} years). ", m["vshort_tail"]))
+        _iw(warnings, c.validity_high is not None and validity > c.validity_high,
+            lambda: _cat(m["vlong_head"], v1, m["vlong_tail"]))
 
     # expired check
-    days = v["days"]
-    issues.append(
-        _iw(cfg["expired_check"] & exp.isNotNull() & (exp < run_date),
-            F.concat(cfg["m_expired_head"], (-days).cast("string"), F.lit(" days ago")))
-    )
-    warnings.append(
-        _iw(cfg["expired_check"] & exp.isNotNull() & (exp >= run_date) & (days < 30),
-            F.concat(cfg["m_expires_head"], days.cast("string"), F.lit(" days")))
-    )
-    warnings.append(
-        _iw(cfg["expired_check"] & cfg["expiry_warn_60"] & exp.isNotNull()
-            & (exp >= run_date) & (days >= 30) & (days < 60),
-            F.concat(cfg["m_soon_head"], days.cast("string"), F.lit(" days)")))
-    )
+    days = exp - run if exp is not None else None
+    if c.expired_check and exp is not None:
+        _iw(issues, exp < run, lambda: _cat(m["expired_head"], f"{-days} days ago"))
+        _iw(warnings, exp >= run and days < 30,
+            lambda: _cat(m["expires_head"], f"{days} days"))
+        _iw(warnings, c.expiry_warn_60 and exp >= run and 30 <= days < 60,
+            lambda: _cat(m["soon_head"], f"{days} days)"))
 
     # issue-date sanity
-    age_at_issue = v["age_at_issue"]
-    has_issue_check = cfg["issue_min"].isNotNull()
-    issues.append(_iw(has_issue_check & issue_d.isNotNull() & (issue_d > run_date),
-                      "Issue date cannot be in the future"))
-    issues.append(
-        _iw(has_issue_check & issue_d.isNotNull() & has_dob & (issue_d < dob),
-            "Issue date cannot be before date of birth")
-    )
-    issues.append(
-        _iw(
-            has_issue_check & issue_d.isNotNull() & has_dob & (issue_d >= dob)
-            & (age_at_issue < cfg["issue_min"]),
-            F.concat(F.lit("Person was "), age_at_issue.cast("string"),
-                     cfg["m_issue_tail"]),
-        )
-    )
+    age_at_issue = _age(issue_d, dob) if has_dob and issue_d is not None else None
+    if c.issue_check_min_age is not None and issue_d is not None:
+        _iw(issues, issue_d > run, "Issue date cannot be in the future")
+        if has_dob:
+            _iw(issues, issue_d < dob, "Issue date cannot be before date of birth")
+            _iw(issues, issue_d >= dob and age_at_issue < c.issue_check_min_age,
+                lambda: _cat(f"Person was {age_at_issue}", m["issue_tail"]))
 
     # Ontario DOB-in-number encoding (ontario_dl.py:156-202)
-    no_hyphen = F.regexp_replace(clean, r"[\s\-]", "")
-    last6 = F.substring(no_hyphen, -6, 6)
-    yy = F.date_format(dob, "yy")
-    male = F.concat(yy, F.date_format(dob, "MM"), F.date_format(dob, "dd"))
-    female = F.concat(yy, F.lpad((F.month(dob) + 50).cast("string"), 2, "0"),
-                      F.date_format(dob, "dd"))
-    gender = F.upper(F.trim(F.coalesce(col("gender"), F.lit(""))))
-    checkable = cfg["ont_dob"] & (clean != "") & has_dob
-    issues.append(
-        _iw(checkable & (last6 != male) & (last6 != female),
-            F.concat(F.lit("Last 6 digits of license '"), last6,
-                     F.lit("' do not match DOB encoding. Expected '"), male,
-                     F.lit("' (male) or '"), female,
-                     F.lit("' (female with month +50)")))
-    )
-    warnings.append(
-        _iw(checkable & (last6 == male) & gender.isin("F", "FEMALE"),
-            F.concat(F.lit("License uses male DOB encoding but gender is '"),
-                     gender,
-                     F.lit("'. Expected female encoding with month +50.")))
-    )
-    warnings.append(
-        _iw(checkable & (last6 == female) & gender.isin("M", "MALE"),
-            F.concat(
-                F.lit("License uses female DOB encoding (month +50) but gender is '"),
-                gender, F.lit("'.")))
-    )
+    checkable = c.ontario_dob_encoding and clean != "" and has_dob
+    if checkable:
+        last6 = _SEP.sub("", clean)[-6:]
+        y, mo, d = _ymd(dob)
+        male = f"{abs(y) % 100:02d}{mo:02d}{d:02d}"
+        female = f"{abs(y) % 100:02d}{mo + 50}{d:02d}"
+        gender = _trim(_s(r["gender"])).upper()
+        _iw(issues, last6 not in (male, female),
+            f"Last 6 digits of license '{last6}' do not match DOB encoding. Expected "
+            f"'{male}' (male) or '{female}' (female with month +50)")
+        _iw(warnings, last6 == male and gender in ("F", "FEMALE"),
+            f"License uses male DOB encoding but gender is '{gender}'. Expected "
+            "female encoding with month +50.")
+        _iw(warnings, last6 == female and gender in ("M", "MALE"),
+            f"License uses female DOB encoding (month +50) but gender is '{gender}'.")
 
     # ---- details map (each province's details[...] sites; conditions
     # mirror the reference's per-check blocks, e.g. alberta_dl.py:62-188,
     # bc_dl.py:62-248, ontario_dl.py:66-226, california_dl.py:54-143)
-    def det_fn(pi: Column, pw: Column) -> Column:
-        valid_cond = (clean != "") & fmt_ok
-        near_cond = (clean != "") & ~fmt_ok & near
-        dspec = cfg["d_digits"]
-        digits_val = (
-            F.when(valid_cond & (dspec == "len"), F.length(clean).cast("string"))
-            .when(valid_cond & (dspec == "slice1"), F.substring(clean, 2, 64))
-            .when(valid_cond & (dspec == "slice5"), F.substring(clean, 6, 64))
-            .when(valid_cond & dspec.rlike("^[0-9]+$"), dspec)
-            .when(near_cond & cfg["d_digits_near"], F.length(clean).cast("string"))
-        )
-        # BC NDL:/DL: prefix detection flags (bc_dl.py:74-96)
-        is_ndl = cfg["bc_strip"] & raw.startswith("NDL")
-        is_dl = cfg["bc_strip"] & ~raw.startswith("NDL") & raw.startswith("DL")
-        neither = cfg["bc_strip"] & ~is_ndl & ~is_dl
-        # NS surname-prefix check (nova_scotia_dl.py:89-120)
-        ns_gate = (
-            cfg["ns_prefix"] & (clean != "") & (F.length(clean) >= 5)
-            & (last_name != "")
-        )
-        # first-letter keys: ontario_dl.py:95-110 (no alpha gate,
-        # "license_" spelling), quebec_dl.py:104-118 / newfoundland
-        # ("licence_", alpha-gated), california_dl.py:73-86 (alpha +
-        # last-name gated, adds name_extraction_source)
-        fl = cfg["d_fl"]
-        letter_alpha = letter.rlike("^[A-Z]$")
-        fl_gate = (
-            F.when(fl == "ontario", clean != "")
-            .when(fl == "std", (clean != "") & letter_alpha)
-            .when(fl == "ca", (clean != "") & letter_alpha & (last_name != ""))
-            .otherwise(F.lit(False))
-        )
-        fl_key = F.when(
-            fl.isin("ontario", "ca"), "license_first_letter"
-        ).otherwise(F.lit("licence_first_letter"))
-        ln_initial = F.upper(F.substring(last_name, 1, 1))
-        bday_known = has_dob & exp.isNotNull()
-        bday_match = (F.month(dob) == F.month(exp)) & (
-            F.dayofmonth(dob) == F.dayofmonth(exp)
-        )
-        issue_key_cond = (
-            cfg["issue_min"].isNotNull() & issue_d.isNotNull()
-            & (issue_d <= run_date) & has_dob & (issue_d >= dob)
-        )
-        return _dmap(
-            ("checks_performed", cfg["d_checks"]),
-            ("state", cfg["d_state"]),
-            ("last_name_source", _dv(cfg["d_ln_src"], v["name_src"])),
-            ("extracted_last_name",
-             _dv(cfg["d_ln_src"] & (last_name != ""), last_name)),
-            (cfg["d_num_key"], clean),
-            ("has_ndl_prefix",
-             _dv(is_ndl | neither, F.when(is_ndl, "true").otherwise("false"))),
-            ("has_dl_prefix",
-             _dv(is_dl | neither, F.when(is_dl, "true").otherwise("false"))),
-            ("prefix_type",
-             _dv(is_ndl | is_dl, F.when(is_ndl, "NDL").otherwise("DL"))),
-            (cfg["d_valid_key"], _dtrue(valid_cond)),
-            ("licence_letter",
-             _dv(cfg["d_letter"] & (valid_cond | near_cond),
-                 F.substring(clean, 1, 1))),
-            ("licence_digits", digits_val),
-            (cfg["d_clean_key"], clean),
-            ("licence_prefix",
-             _dv((cfg["ns_prefix"] & valid_cond) | ns_gate,
-                 F.substring(clean, 1, 5))),
-            ("expected_prefix", _dv(ns_gate, expected)),
-            ("prefix_matches_surname",
-             _dtrue(ns_gate
-                    & (F.substring(clean, 1, 1) == F.substring(expected, 1, 1)))),
-            (fl_key, _dv(fl_gate, letter)),
-            ("last_name_initial", _dv(fl_gate & (last_name != ""), ln_initial)),
-            ("name_extraction_source", _dv((fl == "ca") & fl_gate, v["name_src"])),
-            ("first_letter_matches",
-             _dtrue(fl_gate & (last_name != "") & (letter == ln_initial))),
-            (cfg["d_age_key"], _dv(has_dob, age.cast("string"))),
-            ("date_of_birth",
-             _dv(cfg["d_age_dob"] & has_dob, F.date_format(dob, "yyyy-MM-dd"))),
-            ("expiry_on_birthday",
-             _dtrue(~cfg["d_bday_both"] & bday_known & bday_match)),
-            ("expires_on_birthday",
-             _dv(cfg["d_bday_both"] & bday_known,
-                 F.when(bday_match, "true").otherwise("false"))),
-            ("validity_years", _d1f(has_validity, validity)),
-            ("days_until_expiry",
-             _dv(cfg["expired_check"] & exp.isNotNull() & (days >= 0),
-                 days.cast("string"))),
-            ("age_at_issue", _dv(issue_key_cond, age_at_issue.cast("string"))),
-            ("license_last_6", _dv(checkable, last6)),
-            ("expected_dob_male", _dv(checkable, male)),
-            ("expected_dob_female", _dv(checkable, female)),
-            ("document_gender",
-             _dv(checkable,
-                 F.when(gender == "", "not_provided").otherwise(gender))),
-            ("dob_encoded_in_license",
-             _dtrue(checkable & ((last6 == male) | (last6 == female)))),
-            ("detected_encoding",
-             _dv(checkable & ((last6 == male) | (last6 == female)),
-                 F.when(last6 == male, "male").otherwise("female"))),
-            # Verifik registry lookup — disabled default (config.py:7;
-            # ontario_dl.py:223-226, bc_dl.py:245-248)
-            ("verifik_api_enabled", _dv(cfg["verifik"], "false")),
-            ("verifik_api_skipped_reason",
-             _dv(cfg["verifik"] & (F.size(pi) > 0), "local_validation_failed")),
-        )
-
-    return _result(
-        cfg["name"], issues, warnings,
-        cfg["m_fail_header"], cfg["m_warn_full"], cfg["m_pass_full"],
-        details=det_fn,
+    valid = clean != "" and fmt_ok
+    near_cond = clean != "" and not fmt_ok and near
+    spec = c.d_digits
+    digits = (
+        str(len(clean)) if valid and spec == "len"
+        else clean[1:65] if valid and spec == "slice1"
+        else clean[5:69] if valid and spec == "slice5"
+        else spec if valid and spec is not None and _rlike(spec, "^[0-9]+$")
+        else str(len(clean)) if near_cond and c.d_digits_near
+        else None
     )
-
-
-def dl_validator(cfg: DLConfig, run_date: Column, prefix: str = "") -> Column:
-    """Single-config convenience wrapper (tests / ad-hoc use)."""
-    return _pick(
-        F.array(_dl_cfg_struct(cfg)),
-        lambda c: _dl_result(c, run_date, prefix),
+    # BC NDL:/DL: prefix detection flags (bc_dl.py:74-96)
+    is_ndl = c.bc_prefix_strip and raw.startswith("NDL")
+    is_dl = c.bc_prefix_strip and not is_ndl and raw.startswith("DL")
+    neither = c.bc_prefix_strip and not is_ndl and not is_dl
+    # first-letter keys: ontario_dl.py:95-110 (no alpha gate, "license_"
+    # spelling), quebec_dl.py:104-118 / newfoundland ("licence_",
+    # alpha-gated), california_dl.py:73-86 (alpha + last-name gated,
+    # adds name_extraction_source)
+    letter_alpha = _rlike(letter, "^[A-Z]$")
+    fl_gate = clean != "" and (
+        c.d_fl == "ontario"
+        or (c.d_fl == "std" and letter_alpha)
+        or (c.d_fl == "ca" and letter_alpha and last_name != "")
     )
+    fl_key = "license_first_letter" if c.d_fl in ("ontario", "ca") else "licence_first_letter"
+    issue_key = (c.issue_check_min_age is not None and issue_d is not None
+                 and issue_d <= run and has_dob and issue_d >= dob)
+    encoded = checkable and last6 in (male, female)
+    details = _dmap(
+        ("checks_performed", "; ".join(c.d_checks)),
+        ("state", c.d_state),
+        ("last_name_source", name_src if c.d_ln_src else None),
+        ("extracted_last_name", last_name if c.d_ln_src and last_name != "" else None),
+        (c.d_num_key, clean),
+        ("has_ndl_prefix", _b(is_ndl) if is_ndl or neither else None),
+        ("has_dl_prefix", _b(is_dl) if is_dl or neither else None),
+        ("prefix_type", ("NDL" if is_ndl else "DL") if is_ndl or is_dl else None),
+        (c.d_valid_key, _t(valid)),
+        ("licence_letter", clean[:1] if c.d_letter and (valid or near_cond) else None),
+        ("licence_digits", digits),
+        (c.d_clean_key, clean),
+        ("licence_prefix", clean[:5] if (c.ns_prefix and valid) or ns_gate else None),
+        ("expected_prefix", expected if ns_gate else None),
+        ("prefix_matches_surname", _t(ns_gate and clean[:1] == expected[:1])),
+        (fl_key, letter if fl_gate else None),
+        ("last_name_initial", ln_initial if fl_gate and last_name != "" else None),
+        ("name_extraction_source", name_src if c.d_fl == "ca" and fl_gate else None),
+        ("first_letter_matches", _t(fl_gate and last_name != "" and letter == ln_initial)),
+        (c.d_age_key, str(age) if has_dob else None),
+        ("date_of_birth", _iso(dob) if c.d_age_dob and has_dob else None),
+        ("expiry_on_birthday", _t(not c.d_bday_both and bday_match)),
+        ("expires_on_birthday", _b(bday_match) if c.d_bday_both and bday_known else None),
+        ("validity_years", _f1(validity) if has_validity else None),
+        ("days_until_expiry",
+         str(days) if c.expired_check and exp is not None and days >= 0 else None),
+        ("age_at_issue", str(age_at_issue) if issue_key else None),
+        ("license_last_6", last6 if checkable else None),
+        ("expected_dob_male", male if checkable else None),
+        ("expected_dob_female", female if checkable else None),
+        ("document_gender", (gender or "not_provided") if checkable else None),
+        ("dob_encoded_in_license", _t(encoded)),
+        ("detected_encoding", ("male" if last6 == male else "female") if encoded else None),
+        # Verifik registry lookup — disabled default (config.py:7;
+        # ontario_dl.py:223-226, bc_dl.py:245-248)
+        ("verifik_api_enabled", "false" if c.verifik else None),
+        ("verifik_api_skipped_reason",
+         "local_validation_failed" if c.verifik and issues else None),
+    )
+    return _typed(c.name, issues, warnings, m["fail_header"], m["warn_full"],
+                  m["pass_full"], details)
 
 
 # ----------------------------------------------------- passports (V30-41)
@@ -1722,734 +1301,448 @@ def _parse_pp_near(spec: str | None) -> tuple[str | None, int | None, int | None
     return f"len_{parts[2]}", int(parts[1]), None
 
 
-def _pp_cfg_struct(c: PassportConfig) -> Column:
-    kind, lo, hi = _parse_pp_near(c.near_miss)
-    c_lo, c_hi = c.child_window if c.child_window else (None, None)
-    a_lo, a_hi = c.adult_window
-    return F.struct(
-        _lit_s(c.name).alias("name"),
-        _lit_s(c.display).alias("display"),
-        _lit_s(PP_FMT_PREFIX[c.name]).alias("fmt_prefix"),
-        _lit_s(c.country_code).alias("cc"),
-        _lit_s(c.format_pattern).alias("fmt"),
-        _lit_s(kind).alias("near_kind"),
-        _lit_i(lo).alias("near_lo"),
-        _lit_i(hi).alias("near_hi"),
-        _lit_i(c.child_age).alias("child_age"),
-        _lit_d(c_lo).alias("child_lo"),
-        _lit_d(c_hi).alias("child_hi"),
-        _lit_d(a_lo).alias("adult_lo"),
-        _lit_d(a_hi).alias("adult_hi"),
-        _lit_b(c.no_age_fallback).alias("no_age_fallback"),
-        _lit_b(c.fixed_window_only).alias("fixed_window_only"),
-        _lit_b(c.always_window).alias("always_window"),
-        _lit_s(c.invalid_letters).alias("inv_letters"),
-        _lit_s(c.invalid_letters_msg).alias("inv_tail"),
-        _lit_i(c.d_prefix).alias("d_prefix"),
-        _lit_b(c.d_china_type).alias("d_china_type"),
-        _lit_s(c.d_validity_key).alias("d_validity_key"),
-        _lit_s(c.d_country).alias("d_country"),
-        _lit_s(c.w_near).alias("w_near"),
-        _lit_s(c.w_child_head).alias("w_child_head"),
-        _lit_s(c.w_child_tail).alias("w_child_tail"),
-        _lit_s(c.w_adult_tail).alias("w_adult_tail"),
-        _lit_s(c.w_window_tail).alias("w_window_tail"),
-    )
-
-
-def _pp_cfg_array() -> Column:
-    return F.array(*[_pp_cfg_struct(c) for c in PASSPORT_CONFIGS.values()])
-
-
-def _pp_result(cfg: Column, run_date: Column, prefix: str = "") -> Column:
+def _passport(c: PassportConfig, r: dict) -> dict:
     """One parametrized national-passport validator (V31-V40) over a
-    bound config struct. Derived per-row values are bound once."""
-    from webxtract.exprs import bind_once
-
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    raw_e = F.trim(F.coalesce(col("document_number"), F.lit("")))
-    dob_e, issue_e, exp_e = _dates()
-    derived = F.struct(
-        F.upper(F.trim(F.coalesce(col("country_code"), F.lit("")))).alias("cc"),
-        raw_e.alias("raw"),
-        # messages interpolate the number exactly as given (e.g.
-        # us_passport.py:61 "Got: {document_number}")
-        F.coalesce(col("document_number"), F.lit("")).alias("disp"),
-        F.regexp_replace(F.upper(raw_e), r"[\s\-]", "").alias("clean"),
-        _age_expr(issue_e, dob_e).alias("age_at_issue"),
-        (F.datediff(exp_e, issue_e) / 365.25).alias("validity"),
-        F.datediff(exp_e, run_date).alias("days"),
-    )
-    return bind_once(derived, lambda v: _pp_body(cfg, v, run_date, prefix))
-
-
-def _pp_body(cfg: Column, v: Column, run_date: Column, prefix: str) -> Column:
-    cc, raw, clean = v["cc"], v["raw"], v["clean"]
-
-    issues: list[Column] = []
-    warnings: list[Column] = []
+    config row."""
+    run, dob, issue_d, exp = r["run"], r["dob"], r["issue"], r["exp"]
+    cc = _trim(_s(r["country_code"])).upper()
+    # messages interpolate the number exactly as given (e.g.
+    # us_passport.py:61 "Got: {document_number}")
+    disp = _s(r["document_number"])
+    clean = _SEP.sub("", _trim(disp).upper())
+    kind, lo, hi = _parse_pp_near(c.near_miss)
+    issues: list = []
+    warnings: list = []
 
     # country-code check -> WARNING on mismatch (us_passport.py:36-43)
-    warnings.append(
-        _iw((cc != "") & (cc != cfg["cc"]),
-            F.concat(F.lit("Country code '"), cc,
-                     F.lit("' does not match expected '"), cfg["cc"], F.lit("'")))
-    )
+    _iw(warnings, cc != "" and cc != c.country_code,
+        lambda: f"Country code '{cc}' does not match expected '{c.country_code}'")
 
-    fmt_ok = F.regexp_like(clean, cfg["fmt"])
-    near = (
-        F.when(
-            cfg["near_kind"] == "digits",
-            clean.rlike(r"^\d+$")
-            & F.length(clean).between(cfg["near_lo"], cfg["near_hi"]),
-        )
-        .when(cfg["near_kind"] == "france", clean.rlike(r"^[A-Z0-9]{9}$"))
-        .when(
-            cfg["near_kind"] == "len_egd",
-            (F.length(clean) == cfg["near_lo"])
-            & F.substring(clean, 1, 1).isin("E", "G", "D"),
-        )
-        .when(
-            cfg["near_kind"] == "len89_alpha2",
-            F.length(clean).isin(8, 9) & F.substring(clean, 1, 2).rlike("^[A-Z]{2}$"),
-        )
-        .when(
-            cfg["near_kind"] == "len_alpha2",
-            (F.length(clean) == cfg["near_lo"])
-            & F.substring(clean, 1, 2).rlike("^[A-Z]{2}$"),
-        )
-        .when(
-            cfg["near_kind"] == "minlen_alpha",
-            (F.length(clean) >= cfg["near_lo"])
-            & F.substring(clean, 1, 1).rlike("[A-Z]"),
-        )
-        .when(
-            cfg["near_kind"] == "len_alpha",
-            (F.length(clean) == cfg["near_lo"])
-            & F.substring(clean, 1, 1).rlike("[A-Z]"),
-        )
-        .otherwise(F.lit(False))
-    )
-    has_inv = cfg["inv_letters"].isNotNull()
-    bad = F.size(
-        F.filter(F.split(clean, ""), lambda ch: F.contains(cfg["inv_letters"], ch))
-    )
-    disp = v["disp"]
-    issues.append(_iw(clean == "", "Missing passport number"))
-    issues.append(
-        _iw(has_inv & (clean != "") & fmt_ok & (bad > 0),
-            F.concat(
-                F.lit("Passport number contains invalid characters: "),
-                F.array_join(
-                    F.filter(F.split(clean, ""),
-                             lambda ch: F.contains(cfg["inv_letters"], ch)),
-                    ", ",
-                ),
-                cfg["inv_tail"],
-            ))
-    )
-    issues.append(
-        _iw(has_inv & (clean != "") & ~fmt_ok,
-            F.concat(cfg["fmt_prefix"], disp))
-    )
-    issues.append(
-        _iw(~has_inv & (clean != "") & ~fmt_ok & ~near,
-            F.concat(cfg["fmt_prefix"], disp))
-    )
-    # near-miss warning, three byte-exact shapes: digit-count
-    # (us_passport.py:55-58), description (india_passport.py:56-59),
-    # France's accepted-fallback (france_passport.py:63-66)
-    near_msg = (
-        F.when(
-            cfg["near_kind"] == "digits",
-            F.concat(F.lit("Passport number '"), disp, F.lit("' has "),
-                     F.length(clean).cast("string"), F.lit(" digits. "),
-                     cfg["w_near"]),
-        )
-        .when(
-            cfg["near_kind"] == "france",
-            F.concat(F.lit("Passport number '"), disp,
-                     F.lit("' accepted but may not match standard French"
-                           " format (2 digits + 2 letters + 5 digits).")),
-        )
-        .otherwise(
-            F.concat(F.lit("Passport number '"), disp,
-                     F.lit("' may have format issues. "), cfg["w_near"])
-        )
-    )
-    warnings.append(_iw(~has_inv & (clean != "") & ~fmt_ok & near, near_msg))
+    fmt_ok = _rlike(clean, c.format_pattern)
+    near = _near_ok(kind, lo, hi, clean)
+    has_inv = c.invalid_letters is not None
+    bad = [ch for ch in clean if ch in c.invalid_letters] if has_inv else []
+    _iw(issues, clean == "", "Missing passport number")
+    if clean != "":
+        _iw(issues, has_inv and fmt_ok and bad, lambda: _cat(
+            "Passport number contains invalid characters: ", ", ".join(bad),
+            c.invalid_letters_msg))
+        _iw(issues, not fmt_ok and (has_inv or not near),
+            lambda: _cat(PP_FMT_PREFIX[c.name], disp))
+        # near-miss warning, three byte-exact shapes: digit-count
+        # (us_passport.py:55-58), description (india_passport.py:56-59),
+        # France's accepted-fallback (france_passport.py:63-66)
+        _iw(warnings, not has_inv and not fmt_ok and near, lambda: (
+            _cat(f"Passport number '{disp}' has {len(clean)} digits. ", c.w_near)
+            if kind == "digits" else
+            f"Passport number '{disp}' accepted but may not match standard French"
+            " format (2 digits + 2 letters + 5 digits)." if kind == "france" else
+            _cat(f"Passport number '{disp}' may have format issues. ", c.w_near)))
 
-    dob, issue_d, exp = _dates()
-    age_at_issue = v["age_at_issue"]
-    has_age = dob.isNotNull() & issue_d.isNotNull()
+    has_age = dob is not None and issue_d is not None
+    age_at_issue = _age(issue_d, dob) if has_age else None
+    _iw(issues, has_age and issue_d < dob, "Issue date cannot be before date of birth")
 
-    issues.append(_iw(has_age & (issue_d < dob), "Issue date cannot be before date of birth"))
-
-    validity = v["validity"]
-    has_validity = issue_d.isNotNull() & exp.isNotNull()
-    in_adult = (validity >= cfg["adult_lo"]) & (validity <= cfg["adult_hi"])
-    in_child = (validity >= cfg["child_lo"]) & (validity <= cfg["child_hi"])
     # byte-exact validity warnings. Age-interpolating shape
     # (us_passport.py:94-104 and siblings) when w_child_head is set;
     # "Passport has X year validity." shape otherwise
     # (china_passport.py:109-120); no-age/always/fixed window shape
     # shares the latter with w_window_tail (nigeria :95-98, colombia
     # :95-98, china :127-129).
-    v1 = F.format_number(validity, 1)
-    val_head = F.concat(F.lit("Passport has "), v1, F.lit(" year validity. "))
-    age_shape = cfg["w_child_head"].isNotNull()
-    child_msg = F.when(
-        age_shape,
-        F.concat(cfg["w_child_head"], F.lit("(age "),
-                 age_at_issue.cast("string"), F.lit(" at issue) has "), v1,
-                 F.lit(" year validity. "), cfg["w_child_tail"]),
-    ).otherwise(F.concat(val_head, cfg["w_child_tail"]))
-    adult_msg = F.when(
-        age_shape,
-        F.concat(F.lit("Adult passport (age "), age_at_issue.cast("string"),
-                 F.lit(" at issue) has "), v1, F.lit(" year validity. "),
-                 cfg["w_adult_tail"]),
-    ).otherwise(F.concat(val_head, cfg["w_adult_tail"]))
-    window_msg = F.concat(val_head, cfg["w_window_tail"])
-    warnings.append(
-        _iw(cfg["fixed_window_only"] & has_validity & ~in_adult, window_msg)
-    )
-    warnings.append(
-        _iw(cfg["always_window"] & has_validity & ~in_child & ~in_adult,
-            window_msg)
-    )
-    tiered = ~cfg["fixed_window_only"] & ~cfg["always_window"]
-    warnings.append(
-        _iw(tiered & has_validity & has_age
-            & (age_at_issue < cfg["child_age"]) & ~in_child, child_msg)
-    )
-    warnings.append(
-        _iw(tiered & has_validity & has_age
-            & (age_at_issue >= cfg["child_age"]) & ~in_adult, adult_msg)
-    )
-    warnings.append(
-        _iw(tiered & cfg["no_age_fallback"] & has_validity & ~has_age
-            & ~in_child & ~in_adult, window_msg)
-    )
+    has_validity = issue_d is not None and exp is not None
+    validity = (exp - issue_d) / 365.25 if has_validity else None
+    in_adult = has_validity and c.adult_window[0] <= validity <= c.adult_window[1]
+    in_child = (has_validity and c.child_window is not None
+                and c.child_window[0] <= validity <= c.child_window[1])
+    tiered = not c.fixed_window_only and not c.always_window
+    if has_validity:
+        v1 = _f1(validity)
+        head = f"Passport has {v1} year validity. "
+
+        def aged(who: str, tail: str | None) -> str | None:
+            return _cat(who, f"(age {age_at_issue} at issue) has {v1} year validity. ", tail)
+
+        _iw(warnings, c.fixed_window_only and not in_adult, lambda: _cat(head, c.w_window_tail))
+        _iw(warnings, c.always_window and not in_child and not in_adult,
+            lambda: _cat(head, c.w_window_tail))
+        if tiered and has_age:
+            child = age_at_issue < c.child_age
+            _iw(warnings, child and not in_child, lambda: (
+                aged(c.w_child_head, c.w_child_tail) if c.w_child_head is not None
+                else _cat(head, c.w_child_tail)))
+            _iw(warnings, not child and not in_adult, lambda: (
+                aged("Adult passport ", c.w_adult_tail) if c.w_child_head is not None
+                else _cat(head, c.w_adult_tail)))
+        _iw(warnings, tiered and c.no_age_fallback and not has_age
+            and not in_child and not in_adult, lambda: _cat(head, c.w_window_tail))
 
     # expiry: FAIL expired, WARN <180 days
-    days = v["days"]
-    issues.append(
-        _iw(exp.isNotNull() & (exp < run_date),
-            F.concat(F.lit("Passport expired "), (-days).cast("string"), F.lit(" days ago")))
-    )
-    warnings.append(
-        _iw(exp.isNotNull() & (exp >= run_date) & (days < 180),
-            F.concat(F.lit("Passport expires in "), days.cast("string"),
-                     F.lit(" days. Many countries require 6+ months validity"
-                           " for entry.")))
-    )
+    days = exp - run if exp is not None else None
+    if exp is not None:
+        _iw(issues, exp < run, lambda: f"Passport expired {-days} days ago")
+        _iw(warnings, exp >= run and days < 180,
+            lambda: f"Passport expires in {days} days. Many countries require 6+ "
+                    "months validity for entry.")
 
     # ---- details map (the 10 files share one skeleton: checks list,
     # country_code_verified, passport_number_valid [+ per-country prefix/
     # type keys], age_at_issue, validity_years + verdict key,
     # days_until_expiry — e.g. us_passport.py:36-120, china_passport.py:
     # 40-145, nigeria_passport.py:37-117, france_passport.py:45-127)
-    is_france = cfg["near_kind"] == "france"
-    pp_valid = (clean != "") & (
-        (fmt_ok & (~has_inv | (bad == 0))) | (is_france & ~fmt_ok & near)
+    is_france = kind == "france"
+    pp_valid = clean != "" and (
+        (fmt_ok and not bad) or (is_france and not fmt_ok and near))
+    in_either = in_child or in_adult
+    vv = has_validity and (
+        (tiered and has_age and (in_child if age_at_issue < c.child_age else in_adult))
+        or (tiered and c.no_age_fallback and not has_age and in_either)
+        or (c.always_window and in_either)
+        or (c.fixed_window_only and in_adult)
     )
-    in_either = in_child | in_adult
-    vv_cond = has_validity & (
-        (tiered & has_age
-         & F.when(age_at_issue < cfg["child_age"], in_child).otherwise(in_adult))
-        | (tiered & cfg["no_age_fallback"] & ~has_age & in_either)
-        | (cfg["always_window"] & in_either)
-        | (cfg["fixed_window_only"] & in_adult)
-    )
-    ptype = (
-        F.when(
-            cfg["d_china_type"] & pp_valid,
-            F.when(F.substring(clean, 1, 1) == "E", "Ordinary")
-            .when(F.substring(clean, 1, 1) == "G", "Official")
-            .otherwise(F.lit("Diplomatic")),
-        )
-        .when(cfg["always_window"] & has_validity & in_child, "32-page (5 years)")
-        .when(cfg["always_window"] & has_validity & in_adult, "64-page (10 years)")
-    )
+    if c.d_china_type and pp_valid:
+        ptype = {"E": "Ordinary", "G": "Official"}.get(clean[:1], "Diplomatic")
+    elif c.always_window and in_child:
+        ptype = "32-page (5 years)"
+    elif c.always_window and in_adult:
+        ptype = "64-page (10 years)"
+    else:
+        ptype = None
     details = _dmap(
         ("checks_performed",
          "country_code_check; passport_number_format; age_at_issue; "
          "validity_period; expiry_check"),
         # constant initializer keys (e.g. us_passport.py:28)
-        ("country", cfg["d_country"]),
-        ("country_code", cfg["cc"]),
-        ("country_code_verified", _dtrue((cc != "") & (cc == cfg["cc"]))),
-        ("passport_number_valid", _dtrue(pp_valid)),
+        ("country", c.d_country),
+        ("country_code", c.country_code),
+        ("country_code_verified", _t(cc != "" and cc == c.country_code)),
+        ("passport_number_valid", _t(pp_valid)),
         ("format_type",
-         _dv(is_france & pp_valid,
-             F.when(fmt_ok, "standard").otherwise("alphanumeric"))),
+         ("standard" if fmt_ok else "alphanumeric") if is_france and pp_valid else None),
         ("passport_prefix",
-         _dv(pp_valid & cfg["d_prefix"].isNotNull(),
-             F.substring(clean, F.lit(1), cfg["d_prefix"]))),
+         clean[:c.d_prefix] if pp_valid and c.d_prefix is not None else None),
         ("passport_type", ptype),
-        ("age_at_issue", _dv(has_age, age_at_issue.cast("string"))),
-        ("validity_years", _d1f(has_validity, validity)),
-        (cfg["d_validity_key"], _dtrue(vv_cond)),
-        ("days_until_expiry",
-         _dv(exp.isNotNull() & (exp >= run_date), days.cast("string"))),
+        ("age_at_issue", str(age_at_issue) if has_age else None),
+        ("validity_years", _f1(validity) if has_validity else None),
+        (c.d_validity_key, _t(vv)),
+        ("days_until_expiry", str(days) if exp is not None and exp >= run else None),
     )
-    return _result(
-        cfg["name"], issues, warnings,
-        F.concat(cfg["display"], F.lit(" validation failed")),
-        F.concat(cfg["display"], F.lit(" validation passed with warnings")),
-        F.concat(cfg["display"], F.lit(" validation passed")),
-        details=details,
-    )
+    return _typed(c.name, issues, warnings, f"{c.display} validation failed",
+                  f"{c.display} validation passed with warnings",
+                  f"{c.display} validation passed", details)
 
 
-def passport_validator(cfg: PassportConfig, run_date: Column, prefix: str = "") -> Column:
-    """Single-config convenience wrapper (tests / ad-hoc use)."""
-    return _pick(
-        F.array(_pp_cfg_struct(cfg)),
-        lambda c: _pp_result(c, run_date, prefix),
-    )
-
-
-def canadian_passport_validator(run_date: Column, prefix: str = "") -> Column:
+def _canadian_passport(r: dict) -> dict:
     """V30 (validators/canadian_passport.py): no format FAIL, validity
     tiers by age-at-issue (<16: ~5y / 16+: ~10y), >10.5y FAILS when age
     unknown, current age >120 FAILS, pre-1985 issue warns. No expiry check."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    dob, issue_d, exp = _dates()
-    age_at_issue = _age_expr(issue_d, dob)
-    has_age = dob.isNotNull() & issue_d.isNotNull()
-    current_age = _age_expr(run_date, dob)
-    clean = F.regexp_replace(
-        F.upper(F.trim(F.coalesce(col("document_number"), F.lit("")))),
-        r"[\s\-]", "",
-    )
+    run, dob, issue_d, exp = r["run"], r["dob"], r["issue"], r["exp"]
+    has_age = dob is not None and issue_d is not None
+    age_at_issue = _age(issue_d, dob) if has_age else None
+    current_age = _age(run, dob) if dob is not None else None
+    clean = _SEP.sub("", _trim(_s(r["document_number"])).upper())
+    has_validity = issue_d is not None and exp is not None
+    validity = (exp - issue_d) / 365.25 if has_validity else None
+    v1 = _f1(validity) if has_validity else None
+    child = has_age and age_at_issue < 16
 
-    validity = F.datediff(exp, issue_d) / 365.25
-    has_validity = issue_d.isNotNull() & exp.isNotNull()
-
-    issues = [
-        _iw(has_age & (issue_d < dob), "Issue date cannot be before date of birth"),
-        _iw(has_validity & ~has_age & (validity > 10.5),
-            F.concat(F.lit("Invalid validity period: "),
-                     F.format_number(validity, 1),
-                     F.lit(" years. Canadian passports are valid for max 10 years."))),
-        _iw(dob.isNotNull() & (current_age < 0), "Date of birth is in the future"),
-        _iw(dob.isNotNull() & (current_age > 120),
-            F.concat(F.lit("Unrealistic age: "), current_age.cast("string"), F.lit(" years"))),
-        _iw(issue_d.isNotNull() & (issue_d > run_date), "Issue date cannot be in the future"),
-    ]
+    issues: list = []
+    _iw(issues, has_age and issue_d < dob, "Issue date cannot be before date of birth")
+    _iw(issues, has_validity and not has_age and validity > 10.5,
+        lambda: f"Invalid validity period: {v1} years. Canadian passports are valid "
+                "for max 10 years.")
+    _iw(issues, dob is not None and current_age < 0, "Date of birth is in the future")
+    _iw(issues, dob is not None and current_age > 120,
+        lambda: f"Unrealistic age: {current_age} years")
+    _iw(issues, issue_d is not None and issue_d > run, "Issue date cannot be in the future")
     # byte-exact warning texts (canadian_passport.py:77-95,128-133) —
     # part of the details "warnings" copy
-    v1 = F.format_number(validity, 1)
-    warnings = [
-        _iw(has_validity & has_age & (age_at_issue < 16)
-            & ((validity < 4.5) | (validity > 5.5)),
-            F.concat(F.lit("Child passport (age "),
-                     age_at_issue.cast("string"), F.lit(" at issue) has "),
-                     v1, F.lit(" year validity. Expected ~5 years for"
-                               " applicants under 16."))),
-        _iw(has_validity & has_age & (age_at_issue >= 16)
-            & ((validity < 9.5) | (validity > 10.5)),
-            F.concat(F.lit("Adult passport (age "),
-                     age_at_issue.cast("string"), F.lit(" at issue) has "),
-                     v1, F.lit(" year validity. Expected ~10 years for"
-                               " applicants 16+."))),
-        _iw(has_validity & ~has_age & (validity < 4.5),
-            F.concat(F.lit("Unusual short validity period: "), v1,
-                     F.lit(" years"))),
-        _iw(issue_d.isNotNull() & (issue_d <= run_date)
-            & (issue_d < F.to_date(F.lit("1985-01-01"))),
-            F.concat(F.lit("Issue date "),
-                     F.date_format(issue_d, "yyyy-MM-dd"),
-                     F.lit(" predates modern passport format"))),
-    ]
+    warnings: list = []
+    if has_validity and has_age:
+        _iw(warnings, child and (validity < 4.5 or validity > 5.5),
+            lambda: f"Child passport (age {age_at_issue} at issue) has {v1} year "
+                    "validity. Expected ~5 years for applicants under 16.")
+        _iw(warnings, not child and (validity < 9.5 or validity > 10.5),
+            lambda: f"Adult passport (age {age_at_issue} at issue) has {v1} year "
+                    "validity. Expected ~10 years for applicants 16+.")
+    _iw(warnings, has_validity and not has_age and validity < 4.5,
+        lambda: f"Unusual short validity period: {v1} years")
+    _iw(warnings, issue_d is not None and issue_d <= run and issue_d < _D1985,
+        lambda: f"Issue date {_iso(issue_d)} predates modern passport format")
     # details sites: canadian_passport.py:36-136
     details = _dmap(
         ("checks_performed",
          "passport_number_check; age_at_issue; validity_period; "
          "current_age; issue_date_reasonable"),
-        ("passport_number", _dv(clean != "", clean)),
-        ("passport_prefix", _dv(F.length(clean) >= 2, F.substring(clean, 1, 2))),
-        ("age_at_issue", _dv(has_age, age_at_issue.cast("string"))),
-        ("validity_years", _d1f(has_validity, validity)),
-        ("validity_matches_age",
-         _dtrue(has_validity & has_age
-                & F.when(age_at_issue < 16,
-                         (validity >= 4.5) & (validity <= 5.5))
-                .otherwise((validity >= 9.5) & (validity <= 10.5)))),
-        ("current_age", _dv(dob.isNotNull(), current_age.cast("string"))),
+        ("passport_number", clean or None),
+        ("passport_prefix", clean[:2] if len(clean) >= 2 else None),
+        ("age_at_issue", str(age_at_issue) if has_age else None),
+        ("validity_years", v1),
+        ("validity_matches_age", _t(has_validity and has_age and (
+            4.5 <= validity <= 5.5 if child else 9.5 <= validity <= 10.5))),
+        ("current_age", str(current_age) if dob is not None else None),
         ("issue_date_reasonable",
-         _dtrue(issue_d.isNotNull() & (issue_d <= run_date)
-                & (issue_d >= F.to_date(F.lit("1985-01-01"))))),
+         _t(issue_d is not None and _D1985 <= issue_d <= run)),
     )
-    return _result(
-        "canadian_passport", issues, warnings,
-        "Canadian Passport validation failed",
-        "Canadian Passport validation passed with warnings",
-        "Canadian Passport validation passed",
-        details=details,
-    )
+    return _typed("canadian_passport", issues, warnings,
+                  "Canadian Passport validation failed",
+                  "Canadian Passport validation passed with warnings",
+                  "Canadian Passport validation passed", details)
 
 
-def generic_passport_validator(run_date: Column, prefix: str = "") -> Column:
+def _generic_passport(r: dict) -> dict:
     """V41 (validators/generic_passport.py)."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    cc = F.upper(F.trim(F.coalesce(col("country_code"), F.lit(""))))
-    raw = F.trim(F.coalesce(col("document_number"), F.lit("")))
-    clean = F.regexp_replace(F.upper(raw), r"[\s\-]", "")
+    run, dob, issue_d, exp = r["run"], r["dob"], r["issue"], r["exp"]
+    cc = _trim(_s(r["country_code"])).upper()
+    disp = _s(r["document_number"])
+    clean = _SEP.sub("", _trim(disp).upper())
+    fmt_ok = _rlike(clean, r"^[A-Z0-9]{6,12}$")
+    has_validity = issue_d is not None and exp is not None
+    validity = (exp - issue_d) / 365.25 if has_validity else None
+    v1 = _f1(validity) if has_validity else None
+    days = exp - run if exp is not None else None
+    has_age = dob is not None and issue_d is not None
 
-    fmt_ok = clean.rlike(r"^[A-Z0-9]{6,12}$")
-    dob, issue_d, exp = _dates()
-    validity = F.datediff(exp, issue_d) / 365.25
-    has_validity = issue_d.isNotNull() & exp.isNotNull()
-    days = F.datediff(exp, run_date)
-
-    issues = [
-        _iw(clean == "", "Missing passport number"),
-        _iw(dob.isNotNull() & issue_d.isNotNull() & (issue_d < dob),
-            "Issue date cannot be before date of birth"),
-        _iw(exp.isNotNull() & (exp < run_date),
-            F.concat(F.lit("Passport expired "), (-days).cast("string"), F.lit(" days ago"))),
-    ]
-    warnings = [
-        _iw((cc != "") & ~cc.isin(list(COUNTRY_CODES)),
-            F.concat(F.lit("Country code '"), cc,
-                     F.lit("' is not a recognized ISO 3166-1 alpha-3 code"))),
-        _iw(cc == "", "No country code found on passport"),
-        _iw((clean != "") & ~fmt_ok & (F.length(clean) < 6),
-            F.concat(F.lit("Passport number '"),
-                     F.coalesce(col("document_number"), F.lit("")),
-                     F.lit("' seems too short. Most passports have 6-12"
-                           " alphanumeric characters."))),
-        _iw((clean != "") & ~fmt_ok & (F.length(clean) > 12),
-            F.concat(F.lit("Passport number '"),
-                     F.coalesce(col("document_number"), F.lit("")),
-                     F.lit("' seems too long. Most passports have 6-12"
-                           " alphanumeric characters."))),
-        _iw((clean != "") & ~fmt_ok & F.length(clean).between(6, 12),
-            F.concat(F.lit("Passport number '"),
-                     F.coalesce(col("document_number"), F.lit("")),
-                     F.lit("' may have format issues."))),
-        _iw(has_validity & (validity < 1),
-            F.concat(F.lit("Passport has very short validity ("),
-                     F.format_number(validity, 1),
-                     F.lit(" years). This may indicate an issue."))),
-        _iw(has_validity & (validity > 12),
-            F.concat(F.lit("Passport has unusually long validity ("),
-                     F.format_number(validity, 1),
-                     F.lit(" years). Most passports are valid for 5-10 years."))),
-        _iw(exp.isNotNull() & (exp >= run_date) & (days < 180),
-            F.concat(F.lit("Passport expires in "), days.cast("string"),
-                     F.lit(" days. Many countries require 6+ months validity"
-                           " for entry."))),
-    ]
+    issues: list = []
+    _iw(issues, clean == "", "Missing passport number")
+    _iw(issues, has_age and issue_d < dob, "Issue date cannot be before date of birth")
+    _iw(issues, exp is not None and exp < run, lambda: f"Passport expired {-days} days ago")
+    warnings: list = []
+    _iw(warnings, cc != "" and cc not in COUNTRY_CODES,
+        lambda: f"Country code '{cc}' is not a recognized ISO 3166-1 alpha-3 code")
+    _iw(warnings, cc == "", "No country code found on passport")
+    if clean != "" and not fmt_ok:
+        n = len(clean)
+        warnings.append(
+            f"Passport number '{disp}' seems too short. Most passports have 6-12"
+            " alphanumeric characters." if n < 6 else
+            f"Passport number '{disp}' seems too long. Most passports have 6-12"
+            " alphanumeric characters." if n > 12 else
+            f"Passport number '{disp}' may have format issues.")
+    _iw(warnings, has_validity and validity < 1,
+        lambda: f"Passport has very short validity ({v1} years). This may indicate an issue.")
+    _iw(warnings, has_validity and validity > 12,
+        lambda: f"Passport has unusually long validity ({v1} years). Most passports "
+                "are valid for 5-10 years.")
+    _iw(warnings, exp is not None and exp >= run and days < 180,
+        lambda: f"Passport expires in {days} days. Many countries require 6+ months "
+                "validity for entry.")
     # headers interpolate the ISO-resolved country name, falling back to
     # "International" when the code is missing/unknown
     # (generic_passport.py:141-160: country_name = details.get("country",
-    # "International"))
-    cpairs: list[Column] = []
-    for code, cname in COUNTRY_CODES.items():
-        cpairs.append(F.lit(code))
-        cpairs.append(F.lit(cname))
-    cc_map = F.create_map(*cpairs)
-    country_name = F.coalesce(cc_map[cc], F.lit("International"))
-    # details sites: generic_passport.py:38-131
-    age_at_issue = _age_expr(issue_d, dob)
-    has_age = dob.isNotNull() & issue_d.isNotNull()
+    # "International")); details sites: generic_passport.py:38-131
+    country = COUNTRY_CODES.get(cc)
     details = _dmap(
         ("checks_performed",
          "country_code_check; passport_number_format; age_at_issue; "
          "validity_period; expiry_check"),
-        ("country_code", _dv(cc != "", cc)),
-        ("country", _dv((cc != "") & cc_map[cc].isNotNull(), cc_map[cc])),
-        ("country_code_valid", _dbool(cc != "", cc_map[cc].isNotNull())),
-        ("passport_number_valid", _dtrue((clean != "") & fmt_ok)),
-        ("passport_number_length",
-         _dv((clean != "") & fmt_ok, F.length(clean).cast("string"))),
-        ("age_at_issue", _dv(has_age, age_at_issue.cast("string"))),
-        ("validity_years", _d1f(has_validity, validity)),
-        ("validity_valid",
-         _dtrue(has_validity & (validity >= 1) & (validity <= 12))),
-        ("days_until_expiry",
-         _dv(exp.isNotNull() & (exp >= run_date), days.cast("string"))),
+        ("country_code", cc or None),
+        ("country", country if cc else None),
+        ("country_code_valid", _b(country is not None) if cc else None),
+        ("passport_number_valid", _t(clean != "" and fmt_ok)),
+        ("passport_number_length", str(len(clean)) if clean != "" and fmt_ok else None),
+        ("age_at_issue", str(_age(issue_d, dob)) if has_age else None),
+        ("validity_years", v1),
+        ("validity_valid", _t(has_validity and 1 <= validity <= 12)),
+        ("days_until_expiry", str(days) if exp is not None and exp >= run else None),
     )
-    return _result(
-        "generic_passport", issues, warnings,
-        F.concat(country_name, F.lit(" Passport validation failed")),
-        F.concat(country_name, F.lit(" Passport validation passed with warnings")),
-        F.concat(country_name, F.lit(" Passport validation passed")),
-        details=details,
-    )
+    name = country or "International"
+    return _typed("generic_passport", issues, warnings,
+                  f"{name} Passport validation failed",
+                  f"{name} Passport validation passed with warnings",
+                  f"{name} Passport validation passed", details)
 
 
 # ------------------------------------------- photo ID / PR card / OHIP / US DL
 
 
-def generic_photo_id_validator(run_date: Column, prefix: str = "") -> Column:
+def _id_card_dates(r: dict, label: str, issues: list) -> tuple:
+    """Date checks shared by the photo-ID and PR-card validators; returns
+    (age, days, validity) with None where the inputs are missing."""
+    run, dob, issue_d, exp = r["run"], r["dob"], r["issue"], r["exp"]
+    age = _age(run, dob) if dob is not None else None
+    days = exp - run if exp is not None else None
+    validity = (exp - issue_d) / 365.25 if issue_d is not None and exp is not None else None
+    if dob is not None:
+        _iw(issues, dob > run, "Date of birth cannot be in the future")
+        _iw(issues, dob <= run and age < 0, "Invalid date of birth")
+    if issue_d is not None:
+        _iw(issues, issue_d > run, "Issue date cannot be in the future")
+        _iw(issues, issue_d <= run and dob is not None and issue_d < dob,
+            "Issue date cannot be before date of birth")
+    _iw(issues, exp is not None and exp < run, lambda: f"{label} expired {-days} days ago")
+    return age, days, validity
+
+
+def _photo_id(r: dict) -> dict:
     """V42 (validators/generic_photo_id.py) — also serves ON/BC/AB photo
     cards (validation_service.py:212-223)."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    raw = F.trim(F.coalesce(col("document_number"), F.lit("")))
-    clean = F.regexp_replace(F.upper(raw), r"[\s\-]", "")
-    dob, issue_d, exp = _dates()
-    age = _age_expr(run_date, dob)
-    validity = F.datediff(exp, issue_d) / 365.25
-    has_validity = issue_d.isNotNull() & exp.isNotNull()
-    days = F.datediff(exp, run_date)
-
-    issues = [
-        _iw(clean == "", "Missing document number"),
-        _iw(dob.isNotNull() & (dob > run_date), "Date of birth cannot be in the future"),
-        _iw(dob.isNotNull() & (dob <= run_date) & (age < 0), "Invalid date of birth"),
-        _iw(issue_d.isNotNull() & (issue_d > run_date), "Issue date cannot be in the future"),
-        _iw(issue_d.isNotNull() & (issue_d <= run_date) & dob.isNotNull() & (issue_d < dob),
-            "Issue date cannot be before date of birth"),
-        _iw(exp.isNotNull() & (exp < run_date),
-            F.concat(F.lit("Photo ID expired "), (-days).cast("string"), F.lit(" days ago"))),
-    ]
-    warnings = [
-        _iw((clean != "") & (F.length(clean) < 4),
-            F.concat(F.lit("Document number '"),
-                     F.coalesce(col("document_number"), F.lit("")),
-                     F.lit("' seems too short"))),
-        _iw(exp.isNotNull() & (exp >= run_date) & (days < 30),
-            F.concat(F.lit("Photo ID expires in "), days.cast("string"), F.lit(" days"))),
-        _iw(has_validity & (validity < 1),
-            F.concat(F.lit("Photo ID has very short validity ("),
-                     F.format_number(validity, 1), F.lit(" years)"))),
-        _iw(has_validity & (validity > 10),
-            F.concat(F.lit("Photo ID has unusually long validity ("),
-                     F.format_number(validity, 1), F.lit(" years)"))),
-    ]
+    disp = _s(r["document_number"])
+    clean = _SEP.sub("", _trim(disp).upper())
+    issues: list = []
+    _iw(issues, clean == "", "Missing document number")
+    age, days, validity = _id_card_dates(r, "Photo ID", issues)
+    v1 = _f1(validity) if validity is not None else None
+    warnings: list = []
+    _iw(warnings, clean != "" and len(clean) < 4,
+        lambda: f"Document number '{disp}' seems too short")
+    _iw(warnings, days is not None and 0 <= days < 30,
+        lambda: f"Photo ID expires in {days} days")
+    _iw(warnings, validity is not None and validity < 1,
+        lambda: f"Photo ID has very short validity ({v1} years)")
+    _iw(warnings, validity is not None and validity > 10,
+        lambda: f"Photo ID has unusually long validity ({v1} years)")
     # details sites: generic_photo_id.py:35-96
+    ok = clean != "" and len(clean) >= 4
     details = _dmap(
         ("checks_performed",
          "document_number_check; date_of_birth_check; issue_date_check; "
          "expiry_check; validity_period"),
-        ("document_number_valid", _dtrue((clean != "") & (F.length(clean) >= 4))),
-        ("document_number_length",
-         _dv((clean != "") & (F.length(clean) >= 4),
-             F.length(clean).cast("string"))),
-        ("calculated_age", _dv(dob.isNotNull(), age.cast("string"))),
-        ("days_until_expiry",
-         _dv(exp.isNotNull() & (exp >= run_date), days.cast("string"))),
-        ("validity_years", _d1f(has_validity, validity)),
+        ("document_number_valid", _t(ok)),
+        ("document_number_length", str(len(clean)) if ok else None),
+        ("calculated_age", None if age is None else str(age)),
+        ("days_until_expiry", str(days) if days is not None and days >= 0 else None),
+        ("validity_years", v1),
     )
-    return _result(
-        "generic_photo_id", issues, warnings,
-        "Photo ID validation failed",
-        "Photo ID validation passed with warnings",
-        "Photo ID validation passed",
-        details=details,
-    )
+    return _typed("generic_photo_id", issues, warnings, "Photo ID validation failed",
+                  "Photo ID validation passed with warnings",
+                  "Photo ID validation passed", details)
 
 
-def canada_pr_card_validator(run_date: Column, prefix: str = "") -> Column:
+def _pr_card(r: dict) -> dict:
     """V43 (validators/canada_pr_card.py): format warn-only, under-18
     warn, expiry warn tiers 180/365, validity ~5y window 4-6."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    raw = F.trim(F.coalesce(col("document_number"), F.lit("")))
-    clean = F.regexp_replace(F.upper(raw), r"[\s\-]", "")
-    dob, issue_d, exp = _dates()
-    age = _age_expr(run_date, dob)
-    validity = F.datediff(exp, issue_d) / 365.25
-    has_validity = issue_d.isNotNull() & exp.isNotNull()
-    days = F.datediff(exp, run_date)
-
-    issues = [
-        _iw(clean == "", "Missing document number"),
-        _iw(dob.isNotNull() & (dob > run_date), "Date of birth cannot be in the future"),
-        _iw(dob.isNotNull() & (dob <= run_date) & (age < 0), "Invalid date of birth"),
-        _iw(issue_d.isNotNull() & (issue_d > run_date), "Issue date cannot be in the future"),
-        _iw(issue_d.isNotNull() & (issue_d <= run_date) & dob.isNotNull() & (issue_d < dob),
-            "Issue date cannot be before date of birth"),
-        _iw(exp.isNotNull() & (exp < run_date),
-            F.concat(F.lit("PR Card expired "), (-days).cast("string"), F.lit(" days ago"))),
-    ]
-    warnings = [
-        _iw((clean != "") & ~clean.rlike(r"^[A-Z]{2}\d{6}$"),
-            F.concat(F.lit("Document number '"), raw,
-                     F.lit("' does not match expected PR Card format (2 letters + 6 digits)"))),
-        _iw(dob.isNotNull() & (dob <= run_date) & (age >= 0) & (age < 18),
-            F.concat(F.lit("Holder is under 18 years old (age: "), age.cast("string"), F.lit(")"))),
-        _iw(exp.isNotNull() & (exp >= run_date) & (days < 180),
-            F.concat(F.lit("PR Card expires in "), days.cast("string"),
-                     F.lit(" days - renewal recommended within 6 months of expiry"))),
-        _iw(exp.isNotNull() & (exp >= run_date) & (days >= 180) & (days < 365),
-            F.concat(F.lit("PR Card expires in "), days.cast("string"), F.lit(" days"))),
-        _iw(has_validity & (validity < 4),
-            F.concat(F.lit("PR Card has shorter than expected validity ("),
-                     F.format_number(validity, 1),
-                     F.lit(" years, expected ~5 years)"))),
-        _iw(has_validity & (validity > 6),
-            F.concat(F.lit("PR Card has longer than expected validity ("),
-                     F.format_number(validity, 1), F.lit(" years)"))),
-    ]
+    raw = _trim(_s(r["document_number"]))
+    clean = _SEP.sub("", raw.upper())
+    pr_ok = _rlike(clean, r"^[A-Z]{2}\d{6}$")
+    issues: list = []
+    _iw(issues, clean == "", "Missing document number")
+    age, days, validity = _id_card_dates(r, "PR Card", issues)
+    v1 = _f1(validity) if validity is not None else None
+    warnings: list = []
+    _iw(warnings, clean != "" and not pr_ok,
+        lambda: f"Document number '{raw}' does not match expected PR Card format "
+                "(2 letters + 6 digits)")
+    _iw(warnings, age is not None and r["dob"] <= r["run"] and 0 <= age < 18,
+        lambda: f"Holder is under 18 years old (age: {age})")
+    _iw(warnings, days is not None and 0 <= days < 180,
+        lambda: f"PR Card expires in {days} days - renewal recommended within 6 months "
+                "of expiry")
+    _iw(warnings, days is not None and 180 <= days < 365,
+        lambda: f"PR Card expires in {days} days")
+    _iw(warnings, validity is not None and validity < 4,
+        lambda: f"PR Card has shorter than expected validity ({v1} years, expected "
+                "~5 years)")
+    _iw(warnings, validity is not None and validity > 6,
+        lambda: f"PR Card has longer than expected validity ({v1} years)")
     # details sites: canada_pr_card.py:34-103
-    pr_ok = clean.rlike(r"^[A-Z]{2}\d{6}$")
     details = _dmap(
         ("checks_performed",
          "document_number_format; date_of_birth_check; issue_date_check; "
          "expiry_check; validity_period"),
-        ("document_number_valid", _dbool(clean != "", pr_ok)),
+        ("document_number_valid", _b(pr_ok) if clean != "" else None),
         ("document_number_format",
-         _dv((clean != "") & pr_ok,
-             "Valid PR Card format (2 letters + 6 digits)")),
-        ("calculated_age", _dv(dob.isNotNull(), age.cast("string"))),
-        ("days_until_expiry",
-         _dv(exp.isNotNull() & (exp >= run_date), days.cast("string"))),
-        ("validity_years", _d1f(has_validity, validity)),
+         "Valid PR Card format (2 letters + 6 digits)" if clean != "" and pr_ok else None),
+        ("calculated_age", None if age is None else str(age)),
+        ("days_until_expiry", str(days) if days is not None and days >= 0 else None),
+        ("validity_years", v1),
     )
-    return _result(
-        "canada_pr_card", issues, warnings,
-        "PR Card validation failed",
-        "PR Card validation passed with warnings",
-        "PR Card validation passed",
-        details=details,
-    )
+    return _typed("canada_pr_card", issues, warnings, "PR Card validation failed",
+                  "PR Card validation passed with warnings",
+                  "PR Card validation passed", details)
 
 
-def _luhn_valid_expr(digits: Column) -> Column:
-    """Luhn mod-10 over a digit string (ontario_health_card.py:28-59),
-    as a higher-order aggregate: double every second digit from the
-    right, subtract 9 when >9, sum, mod 10 == 0. Non-digit input is
-    False without evaluating the casts (the reference's ``if not
-    number.isdigit(): return False``; CaseWhen branches are lazy, so
-    this is also the ANSI-cast guard)."""
-    n = F.length(digits)
-    arr = F.split(digits, "")
-    # position from right (0-indexed) = n - i for 1-based element i
-    total = F.aggregate(
-        F.sequence(F.lit(1), n),
-        F.lit(0),
-        lambda acc, i: acc
-        + F.when(
-            ((n - i) % 2) == 1,
-            F.when(
-                F.element_at(arr, i).cast("int") * 2 > 9,
-                F.element_at(arr, i).cast("int") * 2 - 9,
-            ).otherwise(F.element_at(arr, i).cast("int") * 2),
-        ).otherwise(F.element_at(arr, i).cast("int")),
-    )
-    return F.when(digits.rlike(r"^[0-9]+$"), (total % 10) == 0).otherwise(
-        F.lit(False)
-    )
+def _luhn(digits: str | None) -> bool | None:
+    """Luhn mod-10 (ontario_health_card.py:28-59): double every second
+    digit from the right, subtract 9 when >9, sum, mod 10 == 0; False
+    unless the input matches ``^[0-9]+$``. NULL where that Java-regex
+    match lets a trailing line terminator through: the old split/cast
+    form summed a NULL digit there."""
+    if digits is None or not _rlike(digits, r"^[0-9]+$"):
+        return False
+    if not digits.isascii() or not digits.isdigit():
+        return None
+    n = len(digits)
+    total = 0
+    for i, ch in enumerate(digits, 1):
+        d = int(ch)
+        if (n - i) % 2 == 1:
+            d = d * 2 - 9 if d * 2 > 9 else d * 2
+        total += d
+    return total % 10 == 0
 
 
-def ontario_health_card_validator(run_date: Column, prefix: str = "") -> Column:
+def _health_card(r: dict) -> dict:
     """V11 (validators/ontario_health_card.py): 10 digits + 2-letter
     version code, Luhn checksum FAIL, version letters not in {I,O,Q,U},
     expired FAIL / <90d warn, DOB-not-future, no-version-code warns."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    raw = F.trim(F.coalesce(col("document_number"), F.lit("")))
-    clean = F.regexp_replace(F.upper(raw), r"[\s\-]", "")
-    digits = F.regexp_replace(clean, r"[^0-9]", "")
-    letters = F.regexp_replace(clean, r"[^A-Z]", "")
-    is_valid_format = (
-        clean.rlike(r"^\d{10}[A-Z]{2}$")
-        | clean.rlike(r"^\d{10}$")
-        | ((F.length(digits) == 10) & F.length(letters).isin(0, 2))
+    run, dob, exp = r["run"], r["dob"], r["exp"]
+    raw = _trim(_s(r["document_number"]))
+    clean = _SEP.sub("", raw.upper())
+    digits = _NON_DIGIT.sub("", clean)
+    letters = _NON_AZ.sub("", clean)
+    valid_format = (
+        _rlike(clean, r"^\d{10}[A-Z]{2}$") or _rlike(clean, r"^\d{10}$")
+        or (len(digits) == 10 and len(letters) in (0, 2))
     )
     # _parse_health_card_number fallthrough (ontario_health_card.py:61-96):
     # 10 digits extracted -> digits; else the whole cleaned string (the
     # invalid case returns `clean`, not ""), "" for an empty input
-    health_number = (
-        F.when(raw == "", F.lit(""))
-        .when(F.length(digits) == 10, digits)
-        .otherwise(clean)
-    )
-    version = F.when(
-        (F.length(digits) == 10) & (F.length(letters) == 2), letters
-    ).otherwise(F.lit(""))
-    luhn_ok = _luhn_valid_expr(health_number)
-    has_bad_version_letter = (
-        F.size(F.filter(F.split(version, ""), lambda c: c.isin("I", "O", "Q", "U"))) > 0
-    )
-    dob = parse_date_expr(col("date_of_birth"))
-    _dob_u, _issue_u, exp = _dates()
-    days = F.datediff(exp, run_date)
+    number = "" if raw == "" else digits if len(digits) == 10 else clean
+    version = letters if len(digits) == 10 and len(letters) == 2 else ""
+    is_10 = len(number) == 10
+    luhn_ok = _luhn(number)
+    bad = ", ".join(ch for ch in version if ch in "IOQU")
+    days = exp - run if exp is not None else None
+    bad_msg = (f"Version code contains invalid letter(s): {bad}. Letters I, O, Q, U "
+               "are not used in Ontario Health Card version codes.")
 
-    bad_version_letters = F.array_join(
-        F.filter(F.split(version, ""), lambda c: c.isin("I", "O", "Q", "U")), ", "
-    )
-    issues = [
-        _iw(raw == "", "Missing health card number"),
-        _iw((raw != "") & ~is_valid_format,
-            F.concat(
-                F.lit("Invalid Ontario Health Card format. Expected: 10 digits"
-                      " + 2-letter version code (e.g., 1234567890AB), Got: "),
-                raw)),
-        _iw((F.length(health_number) == 10) & ~luhn_ok,
-            F.concat(F.lit("Health card number '"), health_number,
-                     F.lit("' failed Luhn checksum validation. The number may"
-                           " be incorrectly entered or invalid."))),
-        _iw((raw != "") & is_valid_format & (version != "") & has_bad_version_letter,
-            F.concat(
-                F.lit("Invalid version code: Version code contains invalid"
-                      " letter(s): "),
-                bad_version_letters,
-                F.lit(". Letters I, O, Q, U are not used in Ontario Health"
-                      " Card version codes."))),
-        _iw(exp.isNotNull() & (exp < run_date),
-            F.concat(F.lit("Health card expired "), (-days).cast("string"), F.lit(" days ago"))),
-        _iw(dob.isNotNull() & (dob > run_date), "Date of birth cannot be in the future"),
-    ]
-    warnings = [
-        _iw((raw != "") & is_valid_format & (version == ""),
-            "No version code found. This may be an old-style (red and white)"
-            " health card which is being phased out."),
-        _iw(exp.isNotNull() & (exp >= run_date) & (days < 90),
-            F.concat(F.lit("Health card expires in "), days.cast("string"),
-                     F.lit(" days. Consider renewing soon."))),
-        _iw(_blank(col("expiry_date")) & (version == ""),
-            "No expiry date. Old-style health cards without photo are being"
-            " phased out. Please update to a photo health card."),
-    ]
+    issues: list = []
+    _iw(issues, raw == "", "Missing health card number")
+    _iw(issues, raw != "" and not valid_format,
+        lambda: "Invalid Ontario Health Card format. Expected: 10 digits + 2-letter "
+                f"version code (e.g., 1234567890AB), Got: {raw}")
+    _iw(issues, is_10 and luhn_ok is False,
+        lambda: f"Health card number '{number}' failed Luhn checksum validation. The "
+                "number may be incorrectly entered or invalid.")
+    _iw(issues, raw != "" and valid_format and bad, lambda: f"Invalid version code: {bad_msg}")
+    _iw(issues, exp is not None and exp < run, lambda: f"Health card expired {-days} days ago")
+    _iw(issues, dob is not None and dob > run, "Date of birth cannot be in the future")
+    warnings: list = []
+    _iw(warnings, raw != "" and valid_format and version == "",
+        "No version code found. This may be an old-style (red and white) health card "
+        "which is being phased out.")
+    _iw(warnings, days is not None and 0 <= days < 90,
+        lambda: f"Health card expires in {days} days. Consider renewing soon.")
+    _iw(warnings, _blank(r["expiry_date"]) and version == "",
+        "No expiry date. Old-style health cards without photo are being phased out. "
+        "Please update to a photo health card.")
     # details sites: ontario_health_card.py:147-228; version_code_message
     # values from _validate_version_code (:100-131; the len!=2 and
     # non-alpha branches are unreachable — version is "" or 2 letters by
     # construction)
     version_msg = (
-        F.when(version == "", "No version code (may be old-style card)")
-        .when(
-            has_bad_version_letter,
-            F.concat(
-                F.lit("Version code contains invalid letter(s): "),
-                bad_version_letters,
-                F.lit(". Letters I, O, Q, U are not used in Ontario Health"
-                      " Card version codes."),
-            ),
-        )
-        .otherwise(F.concat(F.lit("Valid version code: "), version))
+        "No version code (may be old-style card)" if version == ""
+        else bad_msg if bad else f"Valid version code: {version}"
     )
-    is_10 = F.length(health_number) == 10
     details = _dmap(
         ("checks_performed",
          "health_card_format; luhn_checksum; version_code_validation; "
          "expiry_check; age_validation"),
-        ("raw_document_number", F.coalesce(col("document_number"), F.lit(""))),
-        ("health_number", health_number),
-        ("version_code", F.when(version == "", "none").otherwise(version)),
-        ("format_valid", _dtrue((raw != "") & is_valid_format)),
-        ("luhn_valid", _dbool(is_10, luhn_ok)),
-        ("luhn_checksum_passed", _dtrue(is_10 & luhn_ok)),
-        ("version_code_valid",
-         _dbool(is_valid_format, ~has_bad_version_letter)),
-        ("version_code_message", _dv(is_valid_format, version_msg)),
-        ("days_until_expiry",
-         _dv(exp.isNotNull() & (exp >= run_date), days.cast("string"))),
-        ("calculated_age",
-         _dv(dob.isNotNull() & (dob <= run_date),
-             _age_expr(run_date, dob).cast("string"))),
+        ("raw_document_number", _s(r["document_number"])),
+        ("health_number", number),
+        ("version_code", version or "none"),
+        ("format_valid", _t(raw != "" and valid_format)),
+        ("luhn_valid", _b(luhn_ok is True) if is_10 else None),
+        ("luhn_checksum_passed", _t(is_10 and luhn_ok is True)),
+        ("version_code_valid", _b(not bad) if valid_format else None),
+        ("version_code_message", version_msg if valid_format else None),
+        ("days_until_expiry", str(days) if days is not None and days >= 0 else None),
+        ("calculated_age", str(_age(run, dob)) if dob is not None and dob <= run else None),
     )
-    return _result(
-        "ontario_health_card", issues, warnings,
-        "Ontario Health Card validation failed",
-        "Ontario Health Card validation passed with warnings",
-        "Ontario Health Card validation passed",
-        details=details,
-    )
+    return _typed("ontario_health_card", issues, warnings,
+                  "Ontario Health Card validation failed",
+                  "Ontario Health Card validation passed with warnings",
+                  "Ontario Health Card validation passed", details)
 
 
 # V46 state table (us_drivers_license.py:10-95), format_desc verbatim
@@ -2487,217 +1780,242 @@ _US_STATE_INDICATORS = {
 _LETTER_MATCH_STATES = {"california", "florida", "michigan", "illinois", "new_jersey"}
 
 
-def _us_state_table() -> Column:
-    """Literal struct array of the 12-state table (key, fmt, min_age,
-    validity_years, first-letter-check flag, address indicators)."""
-    rows = []
-    for key, name, fmt, min_age, vy, fmt_desc in US_STATE_FORMATS:
-        rows.append(
-            F.struct(
-                _lit_s(key).alias("key"),
-                _lit_s(name).alias("state_name"),
-                _lit_s(fmt).alias("fmt"),
-                _lit_s(fmt_desc).alias("fmt_desc"),
-                _lit_i(min_age).alias("min_age"),
-                _lit_i(vy).alias("validity_years"),
-                _lit_b(key in _LETTER_MATCH_STATES).alias("letter_check"),
-                F.array(
-                    *[F.lit(i) for i in _US_STATE_INDICATORS[key]]
-                ).alias("indicators"),
-            )
-        )
-    return F.array(*rows)
-
-
-def us_drivers_license_validator(run_date: Column, prefix: str = "") -> Column:
+def _us_dl(r: dict) -> dict:
     """V46 (validators/us_drivers_license.py:173-352): state from address
     (else by format match), per-state format FAIL, first-letter warn for
-    CA/FL/MI/IL/NJ, state min-age, expiry, validity + 2y slack. The
-    12-state table is a constant-folded literal array; per-state values
-    come from first-match filters over it, not inlined when-chains."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    address = F.upper(F.coalesce(col("address"), F.lit("")))
-    raw = F.trim(F.coalesce(col("document_number"), F.lit("")))
-    clean = F.regexp_replace(F.upper(raw), r"[\s\-]", "")
+    CA/FL/MI/IL/NJ, state min-age, expiry, validity + 2y slack."""
+    run, dob, issue_d, exp = r["run"], r["dob"], r["issue"], r["exp"]
+    address = _s(r["address"]).upper()
+    disp = _s(r["document_number"])
+    clean = _SEP.sub("", _trim(disp).upper())
+    # the separate legs drive details.detection_method
+    # (us_drivers_license.py:197-209)
+    by_addr = next((s for s in US_STATE_FORMATS
+                    if any(i in address for i in _US_STATE_INDICATORS[s[0]])), None)
+    by_fmt = next((s for s in US_STATE_FORMATS if _rlike(clean, s[2])), None)
+    method = "address" if by_addr else "format_match" if by_fmt else "none"
+    st = by_addr or by_fmt
+    key, state, fmt, min_age, term, fmt_desc = st or (None, None, None, 16, None, None)
+    fmt_ok = st is not None and _rlike(clean, fmt)
+    letter_state = key in _LETTER_MATCH_STATES
+    generic_ok = _rlike(clean, r"^[A-Z0-9]{6,16}$")
+    last_name, _src = _last_name(r, "field_first")
+    letter = clean[:1]
+    ln_initial = last_name[:1].upper()
+    age = _age(run, dob) if dob is not None else None
+    days = exp - run if exp is not None else None
+    has_validity = issue_d is not None and exp is not None
+    validity = (exp - issue_d) / 365.25 if has_validity else None
 
-    table = _us_state_table()
-    by_addr = F.try_element_at(
-        F.filter(
-            table,
-            lambda s: F.exists(s["indicators"], lambda i: address.contains(i)),
-        ),
-        F.lit(1),
+    issues: list = []
+    _iw(issues, clean == "", "Missing license number")
+    _iw(issues, clean != "" and st is not None and not fmt_ok,
+        lambda: f"License number doesn't match {state} format. Expected: {fmt_desc}, "
+                f"Got: {disp}")
+    _iw(issues, clean != "" and st is None and not generic_ok,
+        lambda: "Invalid US license format. Expected 6-16 alphanumeric characters, "
+                f"Got: {disp}")
+    _iw(issues, age is not None and age < min_age,
+        lambda: f"Person is {age} years old. Minimum age for driver's license is {min_age}")
+    _iw(issues, exp is not None and exp < run, lambda: f"License expired {-days} days ago")
+    warnings: list = []
+    _iw(warnings, clean != "" and st is None and generic_ok,
+        "Could not determine specific state. Using generic US format validation.")
+    _iw(warnings, clean != "" and last_name != "" and letter_state
+        and _rlike(letter, "[A-Z]") and letter != ln_initial,
+        lambda: f"License first letter '{letter}' may not match last name initial "
+                f"'{ln_initial}' (common in {state or 'this state'})")
+    _iw(warnings, age is not None and min_age <= age < 18,
+        lambda: f"Person is {age}. May have restricted license (graduated licensing)")
+    _iw(warnings, days is not None and 0 <= days < 30,
+        lambda: f"License expires in {days} days")
+    _iw(warnings, has_validity and st is not None and validity > term + 2,
+        lambda: f"Validity period ({_f1(validity)} years) exceeds typical {state} "
+                f"license term ({term} years)")
+    # pass message names the detected state (us_drivers_license.py:348-349)
+    pass_msg = ("US Driver's License validation passed"
+                + (f" ({state} format)" if st is not None else ""))
+    # details sites: us_drivers_license.py:187-319
+    fmt_valid = clean != "" and (fmt_ok if st is not None else generic_ok)
+    fl_gate = (clean != "" and last_name != "" and letter_state
+               and _rlike(letter, "^[A-Z]$"))
+    details = _dmap(
+        ("checks_performed",
+         "state_detection; license_number_format; first_letter_check; "
+         "minimum_age; expiry_check; validity_period; real_id_check"),
+        ("license_number", clean),
+        ("detected_state", state or "Unknown"),
+        ("detection_method", method),
+        ("format_valid", _t(fmt_valid)),
+        ("format_matched", (state or "Generic US") if fmt_valid else None),
+        ("license_first_letter", letter if fl_gate else None),
+        ("last_name_initial", ln_initial if fl_gate else None),
+        ("first_letter_matches", _t(fl_gate and letter == ln_initial)),
+        ("current_age", None if age is None else str(age)),
+        ("minimum_age_required", str(min_age) if age is not None else None),
+        ("days_until_expiry", str(days) if days is not None and days >= 0 else None),
+        ("validity_years", _f1(validity) if has_validity else None),
+        ("real_id_status", "not_verified"),
     )
-    by_fmt = F.try_element_at(
-        F.filter(table, lambda s: F.regexp_like(clean, s["fmt"])), F.lit(1)
-    )
-    # Bind (address-match, format-match) once; everything below
-    # references the lambda variables (tree appears once, evaluated once
-    # per row). The separate legs also drive details.detection_method
-    # (us_drivers_license.py:197-209).
-    from webxtract.exprs import bind_once
-
-    pre = F.struct(by_addr.alias("a"), by_fmt.alias("f"))
-
-    def build_pre(p: Column) -> Column:
-        method = (
-            F.when(p["a"].isNotNull(), "address")
-            .when(p["f"].isNotNull(), "format_match")
-            .otherwise(F.lit("none"))
-        )
-        return bind_once(
-            F.coalesce(p["a"], p["f"]), lambda st: build(st, method)
-        )
-
-    def build(st: Column, method: Column) -> Column:
-        state = st["key"]
-        has_state = state.isNotNull()
-        fmt_ok_for_state = F.when(
-            has_state, F.regexp_like(clean, st["fmt"])
-        ).otherwise(F.lit(False))
-        min_age_for_state = F.coalesce(st["min_age"], F.lit(16))
-        validity_for_state = st["validity_years"]
-        letter_state = F.coalesce(st["letter_check"], F.lit(False))
-
-        generic_ok = clean.rlike(r"^[A-Z0-9]{6,16}$")
-        last_name = _last_name_param(F.lit("field_first"), prefix)
-        letter = F.substring(clean, 1, 1)
-
-        dob, issue_d, exp = _dates()
-        age = _age_expr(run_date, dob)
-        days = F.datediff(exp, run_date)
-        validity = F.datediff(exp, issue_d) / 365.25
-        has_validity = issue_d.isNotNull() & exp.isNotNull()
-
-        disp = F.coalesce(col("document_number"), F.lit(""))
-        issues = [
-            _iw(clean == "", "Missing license number"),
-            _iw((clean != "") & has_state & ~fmt_ok_for_state,
-                F.concat(F.lit("License number doesn't match "), st["state_name"],
-                         F.lit(" format. Expected: "), st["fmt_desc"],
-                         F.lit(", Got: "), disp)),
-            _iw((clean != "") & ~has_state & ~generic_ok,
-                F.concat(F.lit("Invalid US license format. Expected 6-16"
-                               " alphanumeric characters, Got: "), disp)),
-            _iw(dob.isNotNull() & (age < min_age_for_state),
-                F.concat(F.lit("Person is "), age.cast("string"),
-                         F.lit(" years old. Minimum age for driver's license is "),
-                         min_age_for_state.cast("string"))),
-            _iw(exp.isNotNull() & (exp < run_date),
-                F.concat(F.lit("License expired "), (-days).cast("string"), F.lit(" days ago"))),
-        ]
-        warnings = [
-            _iw((clean != "") & ~has_state & generic_ok,
-                "Could not determine specific state. Using generic US format validation."),
-            _iw((clean != "") & (last_name != "") & letter_state & letter.rlike("[A-Z]")
-                & (letter != F.upper(F.substring(last_name, 1, 1))),
-                F.concat(F.lit("License first letter '"), letter,
-                         F.lit("' may not match last name initial '"),
-                         F.upper(F.substring(last_name, 1, 1)),
-                         F.lit("' (common in "),
-                         F.coalesce(st["state_name"], F.lit("this state")),
-                         F.lit(")"))),
-            _iw(dob.isNotNull() & (age >= min_age_for_state) & (age < 18),
-                F.concat(F.lit("Person is "), age.cast("string"),
-                         F.lit(". May have restricted license (graduated licensing)"))),
-            _iw(exp.isNotNull() & (exp >= run_date) & (days < 30),
-                F.concat(F.lit("License expires in "), days.cast("string"), F.lit(" days"))),
-            _iw(has_validity & has_state
-                & (validity > validity_for_state.cast("double") + 2),
-                F.concat(F.lit("Validity period ("), F.format_number(validity, 1),
-                         F.lit(" years) exceeds typical "), st["state_name"],
-                         F.lit(" license term ("),
-                         validity_for_state.cast("string"), F.lit(" years)"))),
-        ]
-        # pass message names the detected state
-        # (us_drivers_license.py:348-349)
-        pass_msg = F.when(
-            has_state,
-            F.concat(F.lit("US Driver's License validation passed ("),
-                     st["state_name"], F.lit(" format)")),
-        ).otherwise(F.lit("US Driver's License validation passed"))
-        # details sites: us_drivers_license.py:187-319
-        fmt_valid = (clean != "") & (
-            (has_state & fmt_ok_for_state) | (~has_state & generic_ok)
-        )
-        fl_gate = (
-            (clean != "") & (last_name != "") & letter_state
-            & letter.rlike("^[A-Z]$")
-        )
-        ln_initial = F.upper(F.substring(last_name, 1, 1))
-        details = _dmap(
-            ("checks_performed",
-             "state_detection; license_number_format; first_letter_check; "
-             "minimum_age; expiry_check; validity_period; real_id_check"),
-            ("license_number", clean),
-            ("detected_state", F.coalesce(st["state_name"], F.lit("Unknown"))),
-            ("detection_method", method),
-            ("format_valid", _dtrue(fmt_valid)),
-            ("format_matched",
-             _dv(fmt_valid,
-                 F.coalesce(st["state_name"], F.lit("Generic US")))),
-            ("license_first_letter", _dv(fl_gate, letter)),
-            ("last_name_initial", _dv(fl_gate, ln_initial)),
-            ("first_letter_matches", _dtrue(fl_gate & (letter == ln_initial))),
-            ("current_age", _dv(dob.isNotNull(), age.cast("string"))),
-            ("minimum_age_required",
-             _dv(dob.isNotNull(), min_age_for_state.cast("string"))),
-            ("days_until_expiry",
-             _dv(exp.isNotNull() & (exp >= run_date), days.cast("string"))),
-            ("validity_years", _d1f(has_validity, validity)),
-            ("real_id_status", "not_verified"),
-        )
-        return _result(
-            "us_drivers_license", issues, warnings,
-            "US Driver's License validation failed",
-            "US Driver's License validation passed with warnings",
-            pass_msg,
-            details=details,
-        )
-
-    # the resolved state row may be NULL (no state detected) —
-    # bind_once's transform over a 1-element array still binds it once;
-    # build() handles NULL fields.
-    return bind_once(pre, build_pre)
+    return _typed("us_drivers_license", issues, warnings,
+                  "US Driver's License validation failed",
+                  "US Driver's License validation passed with warnings",
+                  pass_msg, details)
 
 
 # ------------------------------------------------------------- dispatch
 
 
-def type_specific_validator(doc_type_enum: Column, run_date: Column, prefix: str = "") -> Column:
-    """The 36-entry dispatch map (validation_service.py:129-239): the DL
-    and passport families resolve their config row by name from literal
-    config arrays (one copy of each family's logic in the plan); the six
-    bespoke validators dispatch on the enum. NULL when the type has no
+# the bespoke entries of the 36-entry dispatch map
+# (validation_service.py:129-239); DL and passport types resolve their
+# config row by name
+_BESPOKE = {
+    "ontario_health_card": _health_card,
+    "canadian_passport": _canadian_passport,
+    "generic_passport": _generic_passport,
+    "ontario_photo_card": _photo_id,
+    "bc_photo_id": _photo_id,
+    "alberta_photo_id": _photo_id,
+    "generic_photo_id": _photo_id,
+    "canada_pr_card": _pr_card,
+    "us_drivers_license": _us_dl,
+}
+
+
+def _type_specific(r: dict) -> list[dict]:
+    e = r["doc_type_enum"]
+    if e in DL_CONFIGS:
+        return [_dl(DL_CONFIGS[e], r)]
+    if e in PASSPORT_CONFIGS:
+        return [_passport(PASSPORT_CONFIGS[e], r)]
+    fn = _BESPOKE.get(e)
+    return [fn(r)] if fn else []
+
+
+def _battery(r: dict) -> list[dict]:
+    """5 base validators + the dispatched type-specific one
+    (validation_service.py:283-295)."""
+    return [
+        _data_consistency(r), _document_expiry(r), _age_validation(r),
+        _document_format(r), _FACE_MATCHING, *_type_specific(r),
+    ]
+
+
+def _only(fn, r: dict) -> list[dict]:  # noqa: ANN001
+    return [fn(r)]
+
+
+# ------------------------------------------------------- the Arrow boundary
+
+
+@functools.lru_cache(maxsize=1)
+def _results_arrow_type() -> pa.DataType:
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    return to_arrow_type(RESULTS_TYPE)
+
+
+def _kernel(battery, doc_type_enum: Column | None, run_date: Column,  # noqa: ANN001
+            minimum_age: int = 18) -> Column:
+    """``battery(row) -> [result, ...]`` mapped over each Arrow batch by
+    one scalar Arrow UDF. Rows reach Python as dicts keyed by the 13
+    field names plus dob/issue/exp/run (unix day numbers),
+    doc_type_enum and minimum_age."""
+    rows = F.struct(
+        *[F.col(n) for n in FIELD_NAMES],
+        F.unix_date(F.col(DOB_COL)).alias("dob"),
+        F.unix_date(F.col(ISSUE_COL)).alias("issue"),
+        F.unix_date(F.col(EXP_COL)).alias("exp"),
+        (F.lit(None) if doc_type_enum is None else doc_type_enum)
+        .cast("string").alias("doc_type_enum"),
+        F.unix_date(run_date).alias("run"),
+        F.lit(int(minimum_age)).alias("minimum_age"),
+    )
+
+    def validate(batch: pa.Array) -> pa.Array:
+        return pa.array([battery(r) for r in batch.to_pylist()],
+                        type=_results_arrow_type())
+
+    return F.arrow_udf(validate, RESULTS_TYPE)(rows)
+
+
+def _one(fn, run_date: Column, minimum_age: int = 18) -> Column:  # noqa: ANN001
+    return F.try_element_at(
+        _kernel(functools.partial(_only, fn), None, run_date, minimum_age), F.lit(1))
+
+
+def data_consistency_validator(run_date: Column) -> Column:
+    return _one(_data_consistency, run_date)
+
+
+def document_expiry_validator(run_date: Column) -> Column:
+    return _one(_document_expiry, run_date)
+
+
+def age_validator(run_date: Column, minimum_age: int) -> Column:
+    return _one(_age_validation, run_date, minimum_age)
+
+
+def document_format_validator() -> Column:
+    return _one(_document_format, F.lit(None).cast("date"))
+
+
+def face_matching_validator() -> Column:
+    return _one(_face_matching, F.lit(None).cast("date"))
+
+
+def dl_validator(cfg: DLConfig, run_date: Column) -> Column:
+    return _one(functools.partial(_dl, cfg), run_date)
+
+
+def passport_validator(cfg: PassportConfig, run_date: Column) -> Column:
+    return _one(functools.partial(_passport, cfg), run_date)
+
+
+def canadian_passport_validator(run_date: Column) -> Column:
+    return _one(_canadian_passport, run_date)
+
+
+def generic_passport_validator(run_date: Column) -> Column:
+    return _one(_generic_passport, run_date)
+
+
+def generic_photo_id_validator(run_date: Column) -> Column:
+    return _one(_photo_id, run_date)
+
+
+def canada_pr_card_validator(run_date: Column) -> Column:
+    return _one(_pr_card, run_date)
+
+
+def ontario_health_card_validator(run_date: Column) -> Column:
+    return _one(_health_card, run_date)
+
+
+def us_drivers_license_validator(run_date: Column) -> Column:
+    return _one(_us_dl, run_date)
+
+
+def type_specific_validator(doc_type_enum: Column, run_date: Column) -> Column:
+    """The dispatched type-specific validator; NULL when the type has no
     validator (e.g. unknown)."""
-    dl = _pick(
-        F.filter(_dl_cfg_array(), lambda c: c["name"] == doc_type_enum),
-        lambda c: _dl_result(c, run_date, prefix),
-    )
-    pp = _pick(
-        F.filter(_pp_cfg_array(), lambda c: c["name"] == doc_type_enum),
-        lambda c: _pp_result(c, run_date, prefix),
-    )
-    return F.coalesce(
-        dl,
-        pp,
-        F.when(doc_type_enum == "ontario_health_card",
-               ontario_health_card_validator(run_date, prefix)),
-        F.when(doc_type_enum == "canadian_passport",
-               canadian_passport_validator(run_date, prefix)),
-        F.when(doc_type_enum == "generic_passport",
-               generic_passport_validator(run_date, prefix)),
-        F.when(
-            doc_type_enum.isin(
-                "ontario_photo_card", "bc_photo_id", "alberta_photo_id", "generic_photo_id"
-            ),
-            generic_photo_id_validator(run_date, prefix),
-        ),
-        F.when(doc_type_enum == "canada_pr_card",
-               canada_pr_card_validator(run_date, prefix)),
-        F.when(doc_type_enum == "us_drivers_license",
-               us_drivers_license_validator(run_date, prefix)),
-    )
+    return F.try_element_at(_kernel(_type_specific, doc_type_enum, run_date), F.lit(1))
+
+
+def validation_results_expr(
+    doc_type_enum: Column, run_date: Column, minimum_age: int = 18
+) -> Column:
+    """Full battery: 5 base validators + the dispatched type-specific one."""
+    return _kernel(_battery, doc_type_enum, run_date, minimum_age)
+
+
+def _luhn_valid_expr(digits: Column) -> Column:
+    """Luhn mod-10 over a digit-string column (``_luhn``, per Arrow batch)."""
+
+    def luhn(batch: pa.Array) -> pa.Array:
+        return pa.array([_luhn(s) for s in batch.to_pylist()], type=pa.bool_())
+
+    return F.arrow_udf(luhn, BooleanType())(digits)
 
 
 def doc_type_enum_expr(document_type: Column) -> Column:
@@ -2718,34 +2036,6 @@ def doc_type_enum_expr(document_type: Column) -> Column:
         F.when(document_type.isin(*known), document_type)
         .when(document_type.endswith("_passport"), F.lit("generic_passport"))
         .otherwise(F.lit("unknown"))
-    )
-
-
-def validation_results_expr(
-    doc_type_enum: Column, run_date: Column, minimum_age: int = 18, prefix: str = ""
-) -> Column:
-    """Full battery: 5 base validators + the dispatched type-specific one
-    (validation_service.py:283-295)."""
-    base = F.array(
-        data_consistency_validator(run_date, prefix),
-        document_expiry_validator(run_date, prefix),
-        age_validator(run_date, minimum_age, prefix),
-        document_format_validator(prefix),
-        face_matching_validator(),
-    )
-    specific = type_specific_validator(doc_type_enum, run_date, prefix)
-    # when/concat, not filter(concat(...), isNotNull): an ArrayFilter
-    # here is a CodegenFallback ROOT, which would drag the entire
-    # battery array — including the five codegen-shaped base validators
-    # — into interpreted eval. With when/concat only the dispatched
-    # type-specific subtree (the _pick HOFs) is interpreted; CSE
-    # evaluates `specific` once per row.
-    empty = F.array().cast(
-        "array<struct<validator_name:string,status:string,"
-        "message:string,details:map<string,string>>>"
-    )
-    return F.concat(
-        base, F.when(specific.isNotNull(), F.array(specific)).otherwise(empty)
     )
 
 

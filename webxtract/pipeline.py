@@ -2,13 +2,19 @@
 flagship request lifecycle, POST /ocr/extract/image?validate=true —
 SURVEY.md §3.3):
 
-    extract (UDF legs) -> fields (exprs) -> doc type (exprs)
-    -> fake scoring (exprs) -> validator battery (exprs)
+    extract (Arrow UDF legs) -> fields (exprs) -> doc type (exprs)
+    -> fake scoring (exprs) -> url exchange
+    -> validator battery (one Arrow UDF kernel)
     -> summary + integrity + success (exprs)
 
-Everything after the extraction UDFs fuses into one whole-stage-codegen
-projection; the full-pipeline plan has zero wide dependencies
-(SURVEY.md §4.4). Partitioning/salting + audit live in webxtract.audit.
+The rule-layer expressions are built from higher-order functions, which
+have no whole-stage codegen: a traced production job shows no
+WholeStageCodegen stage, so every rule expression evaluates
+interpreted, row by row. The validator battery, the largest rule set,
+therefore runs as one vectorized Python kernel per Arrow batch
+(webxtract.ops.validators) after the salted url-hash exchange, the
+plan's only wide dependency (SURVEY.md §4.4). Partitioning/salting +
+audit live in webxtract.audit.
 """
 
 from __future__ import annotations
@@ -80,7 +86,8 @@ def _rule_exprs(run_date: str, minimum_age: int) -> dict:
     """The full rule-layer Column set for one (run_date, minimum_age).
 
     Construction is driver-side py4j chatter — one round trip per
-    Column operator, ~24 s for this tree measured at 100k-doc bench —
+    Column operator; the fields/detect_type/fake trees cost 1.9-5.0 s
+    of it on a 4-core host, the validator battery is one UDF call —
     while the resulting Column objects are immutable expression trees,
     reusable across DataFrames (and sessions on the same JVM gateway).
     A long-running cluster job builds its plan once, so caching here
@@ -112,15 +119,20 @@ def _rule_exprs(run_date: str, minimum_age: int) -> dict:
 # QueryExecution; the first hit swaps it for that QE's OPTIMIZED
 # logical plan and drops the QE reference (so no physical/executed
 # state is retained). Caching the optimized plan — not just the
-# analyzed one — matters because Catalyst re-optimization of the
-# megabyte rule tree costs ~5-6.5 s warm per pass, while re-running
-# the optimizer over an already-optimized tree converges in ~1.5 s
-# (measured, 100k-doc plan): the fixed-point batches find nothing
-# left to rewrite after one sweep. The optimizer is semantics-
-# preserving by contract and every hit still builds a fresh Dataset
-# (own QueryExecution / physical plan / RDDs), so — exactly as with
-# the analyzed-plan form — no shuffle output or result can be reused
-# across calls. `optimizedPlan()` is a lazy val on the producer's QE:
+# analyzed one — matters because Catalyst re-optimization of a large
+# rule tree is slow (~5-6.5 s warm per pass on the former expression
+# form of the validator battery), while re-running the optimizer over
+# an already-optimized tree converged in ~1.5 s: the fixed-point
+# batches find nothing left to rewrite after one sweep. The optimized
+# plan also carries the cache substitution made when it was optimized
+# (an InMemoryRelation for every persisted subtree), which would pin
+# that data after the caller unpersists it — so while the session's
+# CacheManager holds anything, the swap keeps the analyzed plan
+# instead, and each hit substitutes against the live cache. The
+# optimizer is semantics-preserving by contract and every hit still
+# builds a fresh Dataset (own QueryExecution / physical plan / RDDs),
+# so — exactly as with the analyzed-plan form — no shuffle output or
+# result can be reused across calls. `optimizedPlan()` is a lazy val on the producer's QE:
 # a producer that executed (every bench/contract path does) has
 # already paid it, so the swap itself is ~free.
 _PLAN_CACHE: list = []
@@ -205,10 +217,13 @@ def run_pipeline(
             ):
                 if isinstance(ent[6], _PendingQE):
                     # One-time swap: take the optimized logical plan
-                    # (already computed if the producer executed) and
+                    # (already computed if the producer executed), or
+                    # the analyzed one while anything is persisted, and
                     # release the QueryExecution so no physical or
                     # executed-plan state stays referenced.
-                    ent[6] = ent[6].qe.optimizedPlan()
+                    qe = ent[6].qe
+                    cached = spark._jsparkSession.sharedState().cacheManager()
+                    ent[6] = qe.optimizedPlan() if cached.isEmpty() else qe.analyzed()
                 jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
                     spark._jsparkSession, ent[6]
                 )

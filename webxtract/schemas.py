@@ -18,6 +18,7 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
@@ -144,6 +145,7 @@ VALIDATOR_RESULT_TYPE = StructType(
         StructField("validator_name", StringType(), False),
         StructField("status", StringType(), False),  # passed|failed|warning|skipped
         StructField("message", StringType(), True),
+        StructField("details", MapType(StringType(), StringType()), True),
     ]
 )
 

@@ -14,6 +14,15 @@ from pyspark.sql import SparkSession
 from webxtract.config import ARROW_MAX_RECORDS_PER_BATCH
 
 
+def graft_cpus() -> int | None:
+    """The ``SPARK_GRAFT_CPUS`` core count, floored at 1; None when it is
+    unset or not an integer (e.g. ``*``), so callers use their default."""
+    try:
+        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "")))
+    except ValueError:
+        return None
+
+
 def get_spark(
     app_name: str = "webxtract",
     master: str | None = None,
@@ -25,8 +34,9 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in this sandbox;
     on a real cluster it is supplied by spark-submit and must be left None.
     """
-    if master is None and os.environ.get("SPARK_GRAFT_CPUS"):
-        master = f"local[{os.environ['SPARK_GRAFT_CPUS']}]"
+    cpus = graft_cpus()
+    if master is None and cpus is not None:
+        master = f"local[{cpus}]"
 
     builder = SparkSession.builder.appName(app_name)
     if master:
@@ -47,7 +57,7 @@ def get_spark(
     # (capped at 64g: half this machine class's RAM — the A/B saw no
     # further win past 64g, and -Xms must stay clear of the OS +
     # Python-worker footprint whatever core count the env reports)
-    n_threads = int(os.environ.get("SPARK_GRAFT_CPUS", "16") or 16)
+    n_threads = cpus or 16
     driver_mem = os.environ.get(
         "WEBXTRACT_DRIVER_MEM", f"{min(64, 2 * n_threads)}g"
     )
@@ -74,7 +84,7 @@ def get_spark(
         "spark.sql.shuffle.partitions": str(
             shuffle_partitions
             if shuffle_partitions is not None
-            else int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+            else cpus or 32
         ),
         # local mode: driver heap hosts all executor threads, each of
         # which deserializes its own copy of the (large) task binary —
